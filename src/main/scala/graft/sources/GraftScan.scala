@@ -10,13 +10,14 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInterna
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions, Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 import graft.lake.{DataFileMeta, LakeTable, ParquetFooters, Snapshot}
 
@@ -295,12 +296,7 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
       }.toMap
     byBucket.map { case (b, fs) =>
       GraftInputPartition(b, fs.map(f => (f.path, lens(f.path))).toArray,
-        fs.map(_.rows).sum,
-        // provably tombstone-free files (exact per-file live counts): the
-        // columnar reader passes their batches through without even
-        // scanning the tombstone vector
-        fs.map(f => f.liveRows >= 0 && f.liveRows == f.rows).toArray)
-        : InputPartition
+        fs.map(_.rows).sum): InputPartition
     }.toArray
   }
 
@@ -314,12 +310,13 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
     * pruning is O(values) hashes regardless of set size; the per-file
     * bloom/dictionary probe is capped so driver planning stays bounded. */
   @volatile private var runtimeKept: Option[Seq[DataFileMeta]] = None
+  /** What the executed runtime filter pruned, as DSv2 driver metrics:
+    * Spark posts them right after runtime filtering, so they land in this
+    * scan node's SQL metrics (`EXPLAIN`, SQL UI, listener events) per
+    * query. Empty until [[filter]] runs. */
+  @volatile private var runtimeMetrics: Array[CustomTaskMetric] = Array.empty
 
   private val MaxMembershipProbeValues = 64
-  /** Bucket addressing hashes the (capped) cross product of the per-column
-    * IN-sets — O(tuples) driver hashes. Above the cap the bucket set is
-    * near-saturated anyway (tuples >> buckets), so skipping loses nothing. */
-  private val MaxBucketTuples = 1 << 16
 
   /** Every bucket column is runtime-filterable. A join on ALL of them
     * addresses buckets through the cross product of the per-column IN-sets
@@ -356,12 +353,9 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
     //    shard hash covers all of them); candidate buckets = hashes of the
     //    per-column cross product, intersected with the plan-time survivors
     val haveAllCols = ks.bucketCols.forall(byCol.contains)
-    val tupleCount: Long =
-      if (!haveAllCols) Long.MaxValue
-      else ks.bucketCols.map(c => byCol(c).size.toLong)
-        .foldLeft(1L)((a, b) => math.min(a * b, Long.MaxValue / 2))
     val bucketKept: Seq[DataFileMeta] =
-      if (haveAllCols && tupleCount <= MaxBucketTuples) {
+      if (haveAllCols && GraftScan.bucketTupleCount(
+            ks.bucketCols.map(byCol(_).size)) <= GraftScan.MaxBucketTuples) {
         val tuples = ks.bucketCols.map(byCol)
           .foldLeft(Seq(Seq.empty[Any]))((acc, vs) =>
             acc.flatMap(t => vs.map(t :+ _)))
@@ -385,11 +379,21 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
       }
     }
     runtimeKept = Some(kept)
-    GraftScan.runtimeFilterReports.put(lake.root, GraftScan.RuntimeFilterReport(
-      byCol.keys.toSeq.sorted, byCol.values.map(_.size).sum,
+    runtimeMetrics = GraftScan.RuntimeFilterMetrics.zip(Seq[Long](
+      byCol.size, byCol.values.map(_.size).sum,
       basePartitions.length, kept.map(_.bucket).distinct.size,
-      keptFiles.size, kept.size))
+      keptFiles.size, kept.size)).map { case (m, v) =>
+      new CustomTaskMetric {
+        override def name(): String = m.name()
+        override def value(): Long = v
+      }: CustomTaskMetric
+    }
   }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    GraftScan.RuntimeFilterMetrics
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = runtimeMetrics
 
   override def planInputPartitions(): Array[InputPartition] =
     runtimeKept match {
@@ -426,27 +430,17 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
       refs.nonEmpty && refs.subsetOf(readNames) &&
       (!snapshot.mor || refs.subsetOf(ks.keyCols.toSet))
     }
-    // COLUMNAR on copy-on-write: no election to run, only the tombstone
-    // filter — batches flow zero-copy (clean batch: a reprojected
-    // ColumnarBatch over the same vectors; tombstoned batch: live rows
-    // compacted into fresh on-heap vectors). MoR stays row-based — the
-    // per-bucket LWW election is inherently row-at-a-time.
+    // COLUMNAR on copy-on-write only when every kept file is provably
+    // tombstone-free (allKeptClean): `_tombstone` is then not read at all
+    // and the vectorized reader's batches pass through zero-copy. A
+    // tombstone-sprinkled table stays row-based — measured A/B: a per-batch
+    // live-row compaction copy ran ~0.8x the row path, whose per-row work
+    // rides the same vectorized decoder. Tombstone-GC compaction makes an
+    // aged table clean, flipping its scans columnar. MoR stays row-based —
+    // the per-bucket LWW election is inherently row-at-a-time.
     val fmt = new ParquetFileFormat
-    // COLUMNAR only when it provably cannot lose: every kept file
-    // tombstone-free (allKeptClean), so batches pass through untouched —
-    // measured A/B: on tombstone-sprinkled files virtually every ~4k-row
-    // batch pays a live-row compaction copy and the columnar path runs
-    // ~0.8x the row path (whose per-row work rides the same vectorized
-    // decoder), while on clean files the passthrough wins. Tombstone-GC
-    // compaction makes an aged table clean, flipping its scans columnar.
-    // spark.graft.catalog.columnar=false forces the row path (bench A/B).
     val columnar = !snapshot.mor && readStruct.fields.nonEmpty &&
-      allKeptClean &&
-      spark.conf.getOption("spark.graft.catalog.columnar")
-        .forall(_.toBoolean) &&
-      fmt.supportBatch(spark, readStruct) &&
-      readStruct.fields.forall(f =>
-        GraftReaderFactory.columnarCopyable(f.dataType))
+      allKeptClean && fmt.supportBatch(spark, readStruct)
     val readFunc = fmt.buildReaderWithPartitionValues(
       spark,
       dataSchema = snapshot.schema,
@@ -473,11 +467,29 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
       .getOption("spark.graft.mor.electHashMaxRows")
       .map(_.toLong).getOrElse(4000000L)
     new GraftReaderFactory(readFunc, readStruct, snapshot.mor,
-      keyOrds, lsnOrd, tombOrd, projOrds, columnar, required, hashElectMax)
+      keyOrds, lsnOrd, tombOrd, projOrds, columnar, hashElectMax)
   }
 }
 
 object GraftScan {
+  /** Bucket addressing hashes the (capped) cross product of the per-column
+    * IN-sets — O(tuples) driver hashes. Above the cap the bucket set is
+    * near-saturated anyway (tuples >> buckets), so skipping loses nothing. */
+  private[sources] val MaxBucketTuples = 1 << 16
+
+  /** Size of the cross product of the per-column IN-sets, saturating once
+    * it passes [[MaxBucketTuples]]: the running product is multiplied only
+    * while it is at most the cap, so no step can overflow. */
+  private[sources] def bucketTupleCount(sizes: Seq[Int]): Long =
+    sizes.foldLeft(1L)((a, b) => if (a > MaxBucketTuples) a else a * b)
+
+  /** The runtime filter's driver metrics, in the order [[GraftScan.filter]]
+    * reports them. */
+  private[sources] val RuntimeFilterMetrics: Array[CustomMetric] = Array(
+    new RuntimeFilterColumns, new RuntimeFilterValues,
+    new RuntimeFilterBucketsBefore, new RuntimeFilterBucketsAfter,
+    new RuntimeFilterFilesBefore, new RuntimeFilterFilesAfter)
+
   /** long value in the zone-stats physical domain (micros for timestamps,
     * days for dates), None for types zone maps don't cover. */
   private[sources] def statsLong(v: Any): Option[Long] = v match {
@@ -557,30 +569,28 @@ object GraftScan {
       LakeTable.pruneByMembership(snapshot, fs, c, v)
     }
   }
-
-  /** Driver-side observability for runtime (join-driven) filtering: what
-    * the most recent executed runtime filter pruned, PER TABLE ROOT —
-    * concurrent queries on different tables never clobber each other's
-    * report. Specs assert on it; an operator can poll it after a join to
-    * see dynamic-pruning effectiveness without reading event logs. */
-  final case class RuntimeFilterReport(columns: Seq[String], values: Int,
-      bucketsBefore: Int, bucketsAfter: Int,
-      filesBefore: Int, filesAfter: Int)
-  private val MaxReports = 256
-  private[sources] val runtimeFilterReports =
-    new java.util.concurrent.ConcurrentHashMap[String, RuntimeFilterReport] {
-      // bounded: a long-lived session querying many ephemeral tables must
-      // not grow driver state without bound
-      override def put(k: String, v: RuntimeFilterReport): RuntimeFilterReport = {
-        if (size() >= MaxReports && !containsKey(k)) clear()
-        super.put(k, v)
-      }
-    }
-  def runtimeFilterReport(root: String): Option[RuntimeFilterReport] =
-    Option(runtimeFilterReports.get(root))
-  def clearRuntimeFilterReport(root: String): Unit =
-    runtimeFilterReports.remove(root)
 }
+
+/** Runtime (join-driven) filter metrics of a [[GraftScan]]. Spark's SQL
+  * status listener re-instantiates a metric class by name to aggregate its
+  * values, so each metric is a concrete class with a no-arg constructor. */
+sealed abstract class RuntimeFilterMetric(metricName: String, desc: String)
+    extends CustomSumMetric {
+  override def name(): String = metricName
+  override def description(): String = desc
+}
+final class RuntimeFilterColumns extends RuntimeFilterMetric(
+  "runtimeFilterColumns", "runtime filter columns")
+final class RuntimeFilterValues extends RuntimeFilterMetric(
+  "runtimeFilterValues", "runtime filter values")
+final class RuntimeFilterBucketsBefore extends RuntimeFilterMetric(
+  "runtimeFilterBucketsBefore", "runtime filter buckets before")
+final class RuntimeFilterBucketsAfter extends RuntimeFilterMetric(
+  "runtimeFilterBucketsAfter", "runtime filter buckets after")
+final class RuntimeFilterFilesBefore extends RuntimeFilterMetric(
+  "runtimeFilterFilesBefore", "runtime filter files before")
+final class RuntimeFilterFilesAfter extends RuntimeFilterMetric(
+  "runtimeFilterFilesAfter", "runtime filter files after")
 
 /** One bucket's surviving chain: (path, fileLength) pairs plus the chain's
   * total metadata row count (sizes the MoR election strategy). The
@@ -588,33 +598,17 @@ object GraftScan {
   * transform — which is what lets Spark line buckets up across two scans. */
 final case class GraftInputPartition(bucket: Int,
                                      files: Array[(String, Long)],
-                                     rows: Long = 0L,
-                                     /** aligned with files: provably
-                                       * tombstone-free (metadata-exact) */
-                                     clean: Array[Boolean] = Array.empty)
+                                     rows: Long = 0L)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
-}
-
-object GraftReaderFactory {
-  /** Types the columnar tombstone-compaction copy supports (the clean-batch
-    * path is type-agnostic, but a single tombstoned batch must not strand
-    * the partition mid-stream, so eligibility is decided up front). */
-  private[sources] def columnarCopyable(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | StringType | BinaryType |
-         TimestampType | TimestampNTZType | DateType => true
-    case _ => false
-  }
 }
 
 final class GraftReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     readStruct: StructType, mor: Boolean,
     keyOrds: Array[Int], lsnOrd: Int, tombOrd: Int, projOrds: Array[Int],
-    columnar: Boolean = false, required: StructType = StructType(Nil),
-    hashElectMaxRows: Long = 4000000L)
+    columnar: Boolean = false, hashElectMaxRows: Long = 4000000L)
     extends PartitionReaderFactory {
 
   /** Hash election: one pass, O(live keys in chain) executor heap — the
@@ -623,17 +617,12 @@ final class GraftReaderFactory(
   private def hashElect(raw: Iterator[InternalRow]): Iterator[InternalRow] = {
     val keyProj = UnsafeProjection.create(keyOrds.map(i =>
       BoundReference(i, readStruct.fields(i).dataType, nullable = true)))
-    val lsns = new java.util.HashMap[UnsafeRow, java.lang.Long]()
     val winners = new java.util.HashMap[UnsafeRow, InternalRow]()
     raw.foreach { r =>
       val k = keyProj(r)
-      val lsn = if (lsnOrd < 0) 0L else r.getLong(lsnOrd)
-      val cur = lsns.get(k)
-      if (cur == null || lsn >= cur) {
-        val kc = k.copy()
-        lsns.put(kc, lsn)
-        winners.put(kc, r.copy())
-      }
+      val cur = winners.get(k)
+      if (cur == null || lsnOrd < 0 || r.getLong(lsnOrd) >= cur.getLong(lsnOrd))
+        winners.put(k.copy(), r.copy())
     }
     winners.values().iterator().asScala
   }
@@ -718,24 +707,19 @@ final class GraftReaderFactory(
       SparkPath.fromPathString(path), 0L, len,
       Array.empty[String], 0L, 0L, Map.empty)
 
-  /** Columnar read of a copy-on-write bucket: the vectorized parquet
-    * reader's batches pass through ZERO-COPY (a reprojected ColumnarBatch
-    * over the same vectors — `_tombstone` and any other reader-internal
-    * column dropped) whenever the batch holds no tombstoned row, which on
-    * a mostly-live table is virtually every batch; a batch with tombstones
-    * gets its live rows compacted into fresh on-heap vectors (bounded by
-    * the reader's batch size, ~4k rows — never the partition). */
+  /** Columnar read of a copy-on-write bucket. The scan is columnar only
+    * when every kept file is provably tombstone-free, and then reads no
+    * `_tombstone` at all, so the vectorized parquet reader's batches pass
+    * through ZERO-COPY: a reprojected ColumnarBatch over the same vectors. */
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    val batches: Iterator[(ColumnarBatch, Boolean)] =
-      p.files.iterator.zipWithIndex.flatMap { case ((path, len), fi) =>
-        // a metadata-clean file (exact live count == rows) skips even the
-        // tombstone-vector scan — its batches pass through untouched
-        val fileClean = fi < p.clean.length && p.clean(fi)
+    val batches: Iterator[ColumnarBatch] =
+      p.files.iterator.flatMap { case (path, len) =>
         readFunc(partitionedFile(path, len)).asInstanceOf[Iterator[Any]]
           .map {
-            case b: ColumnarBatch => (b, fileClean)
+            case b: ColumnarBatch => new ColumnarBatch(
+              projOrds.map(b.column(_): ColumnVector), b.numRows())
             // the format was built with RETURNING_BATCH=true under a
             // supportBatch schema — a row here would mean silent data loss
             // downstream, so fail loudly instead of filtering it out
@@ -744,77 +728,11 @@ final class GraftReaderFactory(
               s"${other.getClass.getName} instead of a ColumnarBatch")
           }
       }
-    val outTypes = required.fields.map(_.dataType)
-
-    def deadCount(b: ColumnarBatch): Int = {
-      if (tombOrd < 0) return 0
-      val tv = b.column(tombOrd)
-      var dead = 0; var i = 0; val n = b.numRows()
-      while (i < n) {
-        if (!tv.isNullAt(i) && tv.getBoolean(i)) dead += 1
-        i += 1
-      }
-      dead
-    }
-
-    def project(b: ColumnarBatch): ColumnarBatch =
-      new ColumnarBatch(
-        projOrds.map(b.column(_)
-          : org.apache.spark.sql.vectorized.ColumnVector), b.numRows())
-
-    def compactLive(b: ColumnarBatch, live: Int): ColumnarBatch = {
-      import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-      val out = OnHeapColumnVector.allocateColumns(math.max(live, 1), required)
-      val tv = b.column(tombOrd)
-      var outRow = 0; var i = 0; val n = b.numRows()
-      while (i < n) {
-        if (tv.isNullAt(i) || !tv.getBoolean(i)) {
-          var j = 0
-          while (j < projOrds.length) {
-            val src = b.column(projOrds(j)); val dst = out(j)
-            if (src.isNullAt(i)) dst.putNull(outRow)
-            else outTypes(j) match {
-              case BooleanType => dst.putBoolean(outRow, src.getBoolean(i))
-              case ByteType => dst.putByte(outRow, src.getByte(i))
-              case ShortType => dst.putShort(outRow, src.getShort(i))
-              case IntegerType | DateType => dst.putInt(outRow, src.getInt(i))
-              case LongType | TimestampType | TimestampNTZType =>
-                dst.putLong(outRow, src.getLong(i))
-              case FloatType => dst.putFloat(outRow, src.getFloat(i))
-              case DoubleType => dst.putDouble(outRow, src.getDouble(i))
-              case StringType =>
-                val s = src.getUTF8String(i).getBytes
-                dst.putByteArray(outRow, s, 0, s.length)
-              case BinaryType =>
-                val s = src.getBinary(i)
-                dst.putByteArray(outRow, s, 0, s.length)
-              case dt => throw new IllegalStateException(
-                s"columnar copy of unexpected type $dt") // gated up front
-            }
-            j += 1
-          }
-          outRow += 1
-        }
-        i += 1
-      }
-      new ColumnarBatch(
-        out.map(v => v: org.apache.spark.sql.vectorized.ColumnVector), live)
-    }
 
     new PartitionReader[ColumnarBatch] {
       private var current: ColumnarBatch = _
-      override def next(): Boolean = {
-        while (batches.hasNext) {
-          val (b, fileClean) = batches.next()
-          val dead = if (fileClean) 0 else deadCount(b)
-          val live = b.numRows() - dead
-          if (live > 0) {
-            current = if (dead == 0) project(b) else compactLive(b, live)
-            return true
-          }
-        }
-        false
-      }
+      override def next(): Boolean =
+        if (batches.hasNext) { current = batches.next(); true } else false
       override def get(): ColumnarBatch = current
       override def close(): Unit = ()
     }

@@ -1,13 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.scanOf
 import graft.cdc.CdcApply
 import graft.lake.LakeTable
 
@@ -53,18 +51,6 @@ class ColumnarReadSpec extends AnyFunSuite {
     (lake, dir)
   }
 
-  /** The executed scan node, unwrapped from AQE. */
-  private def scanOf(df: DataFrame): BatchScanExec = {
-    df.collect() // finalize the adaptive plan first
-    def strip(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
-      case other => other
-    }
-    strip(df.queryExecution.executedPlan)
-      .collectFirst { case b: BatchScanExec => b }
-      .getOrElse(fail("no BatchScanExec in the plan"))
-  }
-
   test("tombstoned CoW stays row-based; tombstone-GC flips it columnar") {
     val (lake, dir) = seed("col-cow", mor = false)
     val sql = s"SELECT conv_id, turn_idx, role, text, ts FROM graft.`$dir`"
@@ -108,6 +94,32 @@ class ColumnarReadSpec extends AnyFunSuite {
     assert(df.count() == want)
   }
 
+  test("tombstone-GC'd CoW with decimal and array columns reads columnar") {
+    // the columnar path is a zero-copy passthrough: any column type the
+    // vectorized parquet reader batches reads columnar
+    val dir = TestSpark.tmpDir("col-types")
+    val lake = new LakeTable(spark, dir)
+    def typed(rows: Seq[(String, Int, Long, String)]): DataFrame =
+      batch(rows)
+        .withColumn("amount", (col("_lsn") / 100).cast("decimal(18,2)"))
+        .withColumn("vec", array(col("_lsn").cast("double"), lit(0.5)))
+    val w1 = (0 until 24).flatMap(c =>
+      (0 until 4).map(t => (f"conv$c%02d", t, (c * 4 + t).toLong, "U")))
+    CdcApply.apply(lake, typed(w1), epoch = 1, nBuckets = 8)
+    val w2 = (0 until 3).map(c => (f"conv$c%02d", 0, (500 + c).toLong, "D"))
+    CdcApply.apply(lake, typed(w2), epoch = 2, nBuckets = 8)
+    graft.lake.Compaction.compact(lake, tombstoneWatermark = Long.MaxValue)
+
+    val cols = Seq("conv_id", "turn_idx", "amount", "vec")
+    val df = spark.sql(s"SELECT ${cols.mkString(", ")} FROM graft.`$dir`")
+    assert(scanOf(df).supportsColumnar,
+      "a provably tombstone-free scan must be columnar for any batch type")
+    val got = df.collect().map(_.toString).sorted.toSeq
+    val want = lake.read().select(cols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    assert(got == want, "columnar read of decimal/array columns diverges")
+  }
+
   test("merge-on-read stays row-based (election is row-at-a-time)") {
     val (lake, dir) = seed("col-mor", mor = true)
     val df = spark.sql(
@@ -136,5 +148,9 @@ class ColumnarReadSpec extends AnyFunSuite {
       .select("conv_id", "turn_idx")
       .collect().map(_.toString).sorted.toSeq
     assert(got == want)
+    // the runtime filter reached the scan with the dim's picked keys
+    val values = scanOf(df).metrics("runtimeFilterValues").value
+    assert(values == (0 until 24).count(_ % 7 == 0),
+      s"runtime filter delivered $values values to the scan")
   }
 }

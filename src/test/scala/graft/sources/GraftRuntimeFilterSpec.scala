@@ -17,7 +17,8 @@ import graft.model.Schemas.KeySpec
   * bucket keys, over the cross product of the per-column IN-sets) and drops
   * every untouched bucket, then bloom/dictionary evidence drops files
   * inside survivors (whole chains on MoR). Results must equal the
-  * unfiltered join exactly — pruning is IO-only, never semantics. */
+  * unfiltered join exactly — pruning is IO-only, never semantics. The
+  * pruning facts are read from the executed scan node's SQL metrics. */
 class GraftRuntimeFilterSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = TestSpark.spark
@@ -70,6 +71,16 @@ class GraftRuntimeFilterSpec extends AnyFunSuite {
     spark.read.parquet(dir).createOrReplaceTempView(name)
   }
 
+  /** The executed fact scan's runtime-filter metrics, keyed without the
+    * `runtimeFilter` prefix. All zero unless Spark invoked
+    * [[GraftScan.filter]], which it does only when a planned runtime filter
+    * reaches the scan. */
+  private def rtfMetrics(df: DataFrame): Map[String, Long] =
+    TestSpark.scanOf(df).metrics.collect {
+      case (k, m) if k.startsWith("runtimeFilter") =>
+        k.stripPrefix("runtimeFilter") -> m.value
+    }
+
   private def joinSql(dir: String, dim: String): String =
     s"""SELECT t.conv_id, t.turn_idx, t.text
        |FROM graft.`$dir` t JOIN $dim d ON t.conv_id = d.conv_id
@@ -87,27 +98,30 @@ class GraftRuntimeFilterSpec extends AnyFunSuite {
         .select(col("conv_id"), col("turn_idx"), col("text"))
         .collect().map(_.toString).sorted
 
-      GraftScan.clearRuntimeFilterReport(dir)
       val df = spark.sql(joinSql(dir, s"rtf_dim_$mor"))
       val got = df.collect().map(_.toString).sorted
       assert(got.toSeq == expected.toSeq, "runtime-filtered join diverges")
 
-      // the hook is only written from GraftScan.filter, which Spark invokes
-      // exclusively when a planned runtime filter reaches the scan — its
-      // presence proves DPP planned AND executed
-      val rep = GraftScan.runtimeFilterReport(dir).getOrElse(
-        fail("scan.filter() was never invoked — no runtime filter planned"))
-      assert(rep.columns == Seq("conv_id") && rep.values == picked.size)
+      // the metrics are only set by GraftScan.filter, which Spark invokes
+      // exclusively when a planned runtime filter reaches the scan — the
+      // delivered values prove DPP planned AND executed
+      val rep = rtfMetrics(df)
+      assert(rep("Columns") > 0,
+        "scan.filter() was never invoked — no runtime filter planned")
+      // filter() only admits bucket columns: the one bucket column here
+      assert(rep("Columns") == 1 && rep("Values") == picked.size)
       // exact bucket arithmetic: only the picked conversations' buckets open
       val wantBuckets = picked
         .map(v => LakeTable.bucketOfValues(Seq(v), nBuckets)).toSet
-      assert(rep.bucketsAfter <= wantBuckets.size,
-        s"kept ${rep.bucketsAfter} buckets, picked keys live in " +
+      assert(rep("BucketsAfter") <= wantBuckets.size,
+        s"kept ${rep("BucketsAfter")} buckets, picked keys live in " +
         s"${wantBuckets.size}")
-      assert(rep.bucketsAfter < rep.bucketsBefore && rep.bucketsBefore >= 12,
-        s"no real pruning: ${rep.bucketsBefore} -> ${rep.bucketsAfter}")
-      assert(rep.filesAfter < rep.filesBefore,
-        s"file count did not shrink: ${rep.filesBefore} -> ${rep.filesAfter}")
+      assert(rep("BucketsAfter") < rep("BucketsBefore") &&
+        rep("BucketsBefore") >= 12,
+        s"no real pruning: ${rep("BucketsBefore")} -> ${rep("BucketsAfter")}")
+      assert(rep("FilesAfter") < rep("FilesBefore"),
+        s"file count did not shrink: ${rep("FilesBefore")} -> " +
+        s"${rep("FilesAfter")}")
     }
   }
 
@@ -116,17 +130,16 @@ class GraftRuntimeFilterSpec extends AnyFunSuite {
     // every conversation picked: bucket set covers everything, the filter
     // becomes a no-op prune — results must still be exact
     dimView("rtf_dim_all", (0 until nConvs).map(c => f"conv$c%02d"))
-    GraftScan.clearRuntimeFilterReport(dir)
     val df = spark.sql(joinSql(dir, "rtf_dim_all"))
     val got = df.collect().map(_.toString).sorted
     val expected = lake.read()
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .collect().map(_.toString).sorted
     assert(got.toSeq == expected.toSeq)
-    GraftScan.runtimeFilterReport(dir).foreach { rep =>
-      assert(rep.bucketsAfter == rep.bucketsBefore,
-        "all keys picked: every bucket must survive")
-    }
+    // zero on both sides when no runtime filter ran
+    val rep = rtfMetrics(df)
+    assert(rep("BucketsAfter") == rep("BucketsBefore"),
+      "all keys picked: every bucket must survive")
   }
 
   /** Multi-column bucket key (the reference's enrolment shape,
@@ -169,25 +182,39 @@ class GraftRuntimeFilterSpec extends AnyFunSuite {
       .select("userid", "courseid", "batchid", "progress")
       .collect().map(_.toString).sorted
 
-    GraftScan.clearRuntimeFilterReport(dir)
-    val got = spark.sql(
+    val df = spark.sql(
       s"""SELECT t.userid, t.courseid, t.batchid, t.progress
          |FROM graft.`$dir` t JOIN rtf_multi_dim d
          |  ON t.userid = d.userid AND t.courseid = d.courseid
          |WHERE d.pick = 1""".stripMargin)
-      .collect().map(_.toString).sorted
+    val got = df.collect().map(_.toString).sorted
     assert(got.toSeq == expected.toSeq, "multi-column runtime join diverges")
 
-    val rep = GraftScan.runtimeFilterReport(dir).getOrElse(
-      fail("scan.filter() was never invoked — no runtime filter planned"))
-    assert(rep.columns == Seq("courseid", "userid"),
-      s"both bucket columns must be runtime-filtered, got ${rep.columns}")
+    val rep = rtfMetrics(df)
+    assert(rep("Columns") > 0,
+      "scan.filter() was never invoked — no runtime filter planned")
+    // filter() only admits bucket columns: both of them must be filtered
+    assert(rep("Columns") == keys.bucketCols.size,
+      s"both bucket columns must be runtime-filtered, got ${rep("Columns")}")
     // cross product of 2 userids x 2 courseids = 4 tuples -> at most 4
     // buckets survive (the 2 true pairs' buckets are among them)
-    assert(rep.bucketsAfter <= 4 && rep.bucketsAfter < rep.bucketsBefore,
-      s"no real pruning: ${rep.bucketsBefore} -> ${rep.bucketsAfter}")
+    assert(rep("BucketsAfter") <= 4 &&
+      rep("BucketsAfter") < rep("BucketsBefore"),
+      s"no real pruning: ${rep("BucketsBefore")} -> ${rep("BucketsAfter")}")
     picked.foreach { case (u, c) =>
       assert(got.exists(_.contains(u)), s"picked pair ($u,$c) lost")
     }
+  }
+
+  /** The cross-product size saturates before it multiplies: three IN-sets
+    * of 2^21 values would wrap a plain product to Long.MinValue, pass the
+    * cap check and materialize 2^63 tuples on the driver. */
+  test("bucket-tuple count saturates instead of overflowing past the cap") {
+    val cap = GraftScan.MaxBucketTuples
+    assert(GraftScan.bucketTupleCount(Seq(2, 3, 4)) == 24)
+    assert(GraftScan.bucketTupleCount(Seq(cap)) == cap)
+    assert(GraftScan.bucketTupleCount(Seq(cap, 2)) > cap)
+    val huge = GraftScan.bucketTupleCount(Seq(1 << 21, 1 << 21, 1 << 21))
+    assert(huge > cap, s"3 x 2^21 values must exceed the cap, got $huge")
   }
 }
