@@ -15,9 +15,9 @@ import graft.lake.{DataFileMeta, LakeTable, PartitionLineage, Snapshot}
  * shuffle:
  *
  *   union(current-state rows of touched buckets, batch change rows)
- *     repartition by bucket(conv_id)                  — the only exchange
+ *     one reduce task per touched bucket(conv_id)     — the only exchange
  *     sortWithinPartitions(bucket, keyhash, key, lsn desc)
- *     first-row-per-key via lag window (LWW winner)   — reuses the sort
+ *     first-row-per-key, streaming (LWW winner)       — reuses the sort
  *     write partitionBy(bucket)                       — ordering satisfied
  *
  * Deletes persist as tombstone rows. This subsumes within-batch dedup
@@ -543,34 +543,18 @@ object CdcApply {
         .withColumn("b", bucketOfCols(ks.bucketCols.map(col), nB))
         .withColumn("_hl",
           when(col("_st") && !col("_tombstone"), 1).otherwise(0))
-    // Reduce-stage sizing: hashpartitioning(b, nPart) with nPart == |touched|
-    // stacks up to ~4 buckets on one task and leaves ~40% of tasks EMPTY
-    // (birthday collisions of 64 bucket values into 64 hash slots), so the
-    // heaviest reduce task carries 4x the mean work and caps multi-core
-    // scaling (measured: 8-core replay ran at ~69% thread utilization).
-    // 4x oversubscription drops the max to 1-2 buckets per task; a bucket
-    // still lands wholly in ONE task (hash of b), so file count, the window
-    // clustering guarantee, and the one-exchange plan are all unchanged,
-    // and empty tasks cost microseconds.
-    // MoR appends have no touched set pre-write; size the in-batch dedup
-    // exchange by the session's shuffle width instead (a bucket still lands
-    // wholly in one task — hash of b — so each bucket gets ONE delta file
-    // per batch and the chain grows by exactly one segment).
-    val nPart =
-      if (morMode) math.max(spark.sessionState.conf.numShufflePartitions, 1)
-      else math.max(touched.size * 4, 1)
-
-    // LWW winner per key in ONE shuffle: repartition on the bucket (which is
-    // a function of the bucket cols, so every key is partition-local), sort
-    // within partitions by (bucket, keyhash, key, lsn desc), then elect the
-    // first row of each key with the STREAMING SortedLwwDedup operator —
-    // plan: Exchange -> Sort -> SortedLwwDedup -> Write with the write's
-    // dynamic-partition ordering already satisfied. The custom operator
-    // replaces the earlier Window(lag)+Filter formulation: WindowExec
-    // buffers every partition group in full (an extra pass of all row bytes
-    // through memory, twice with the `_hl` rollup window), which made the
-    // reduce stage memory-bandwidth-bound; the sorted-stream election holds
-    // ONE row and folds the `_hl` per-key max in the same pass — see
+    // LWW winner per key in ONE shuffle: the caller's exchange clusters the
+    // rows by bucket (a function of the bucket cols, so every key is
+    // partition-local), the merge sorts within partitions by (bucket,
+    // keyhash, key, lsn desc), then elects the first row of each key with
+    // the STREAMING SortedLwwDedup operator — plan: Exchange -> Sort ->
+    // SortedLwwDedup -> Write with the write's dynamic-partition ordering
+    // already satisfied. The custom operator replaces the earlier
+    // Window(lag)+Filter formulation: WindowExec buffers every partition
+    // group in full (an extra pass of all row bytes through memory, twice
+    // with the `_hl` rollup window), which made the reduce stage
+    // memory-bandwidth-bound; the sorted-stream election holds ONE row and
+    // folds the `_hl` per-key max in the same pass — see
     // graft.plans.SortedLwwDedup. (The window plan itself had been measured
     // ~5x faster than groupBy(max_by(struct)), which cannot hash-aggregate.)
     // Sort key prefix `_kh` = xxhash64(bucket cols): rows of one key stay
@@ -580,7 +564,7 @@ object CdcApply {
     // break in favor of the stored row (`_st DESC`, omitted on bulk-load
     // batches where it is a constant), so the change feed deterministically
     // classifies pure redeliveries as `carried`, not `updated`.
-    def lwwDedup(df0: DataFrame, partCols: Seq[String]): DataFrame = {
+    def lwwDedup(shuffled: DataFrame, partCols: Seq[String]): DataFrame = {
       // `_bk` fuses (bucket, keyhash-high-bits) into ONE non-negative long
       // and leads the sort: the external sorter computes its 8-byte radix
       // prefix from the FIRST sort column only, and a per-task-near-constant
@@ -598,8 +582,7 @@ object CdcApply {
       // Sort, same codegen stage as the sort input): 16 bytes/row never
       // enter the shuffle, which is the merge's main memory-bandwidth
       // consumer at high core counts.
-      val sorted = df0
-        .repartition(nPart, partCols.map(col): _*)
+      val sorted = shuffled
         .withColumn("_kh", xxhash64(ks.bucketCols.map(col): _*))
         .withColumn("_bk", shiftleft(col("b").cast("long"), 46)
           .bitwiseOR(shiftrightunsigned(col("_kh"), 18)))
@@ -615,6 +598,29 @@ object CdcApply {
         .drop("_kh", "_bk")
     }
 
+    // Reduce-stage sizing. The copy-on-write merge gives each touched bucket
+    // exactly ONE reduce task through Spark's direct partition-id shuffle
+    // (repartitionById): the id is the bucket's rank in the sorted touched
+    // set (`b` itself when every bucket is touched), looked up in a length-nB
+    // array and carried as the int column `_p` the dedup clusters on (an id
+    // EXPRESSION would not satisfy the dedup's clustering and Catalyst would
+    // add a second exchange; untouched slots stay -1, as every row's bucket
+    // is in `touched`). No task is empty or carries two buckets — a hash
+    // exchange of |touched| bucket values into |touched| slots leaves ~40% of
+    // tasks empty and stacks up to ~4 buckets on one — and each bucket still
+    // lands wholly in one task, so one file is written per touched bucket.
+    // The MoR append and the salted dedup keep a hash exchange. A MoR append
+    // has no touched set before the write, so it is sized by the session's
+    // shuffle width (a bucket still lands wholly in one task: ONE delta file
+    // per bucket per batch, and its chain grows by exactly one segment); the
+    // salted phases spread each bucket's salts over 4x the touched count.
+    def hashDedup(df: DataFrame, partCols: Seq[String]): DataFrame = {
+      val nPart =
+        if (morMode) math.max(spark.sessionState.conf.numShufflePartitions, 1)
+        else math.max(touched.size * 4, 1)
+      lwwDedup(df.repartition(nPart, partCols.map(col): _*), partCols)
+    }
+
     // Hot-conversation skew: optional two-phase salted dedup — phase 1 splits
     // each bucket across `saltBuckets` partitions (per-salt winners), phase 2
     // resolves the per-salt winners globally. Identical duplicate deliveries
@@ -623,12 +629,20 @@ object CdcApply {
       if (patchEnabled)
         patchMerge(unioned, targetSchema, ks, lake.mapPutAllCols)
       else if (saltBuckets > 0) {
-        val salted = lwwDedup(
+        val salted = hashDedup(
           unioned.withColumn("_salt",
             pmod(xxhash64(col("_lsn")), lit(saltBuckets.toLong))),
           Seq("b", "_salt"))
-        lwwDedup(salted.drop("_salt"), Seq("b"))
-      } else lwwDedup(unioned, Seq("b"))
+        hashDedup(salted.drop("_salt"), Seq("b"))
+      } else if (morMode) hashDedup(unioned, Seq("b"))
+      else {
+        val rankOf = Array.fill(nB)(-1)
+        touched.toSeq.sorted.zipWithIndex.foreach { case (b, r) => rankOf(b) = r }
+        lwwDedup(unioned
+          .withColumn("_p", element_at(typedLit(rankOf), col("b") + 1))
+          .repartitionById(touched.size, col("_p")), Seq("_p"))
+          .drop("_p")
+      }
 
     // Change-feed classification of each surviving row, counted via
     // `observe` DURING the write job (zero extra pass, no per-row action

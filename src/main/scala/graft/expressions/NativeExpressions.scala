@@ -103,6 +103,9 @@ object NativeKernels {
     sig
   }
 
+  def hasNull(vec: ArrayData): Boolean =
+    (0 until vec.numElements()).exists(vec.isNullAt)
+
   /** The `nProbe` nearest IVF cells of a vector by (squared L2, cell id):
     * one fused pass over the broadcast centroid matrix — no per-row
     * struct/array materialization, no O(cells) expression tree. `cents`
@@ -232,12 +235,28 @@ case class RhpSignature64(child: Expression, planes: Int, seed: Long)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_rhpsig64"
 
-  override protected def nullSafeEval(input: Any): Any =
-    NativeKernels.rhpSig(input.asInstanceOf[ArrayData], planes, seed, isDouble)
+  // A null element leaves the projection undefined: the signature is NULL,
+  // the same as the declarative form's null-propagating arithmetic.
+  private def elementsNullable = child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+  override def nullable: Boolean = child.nullable || elementsNullable
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val vec = input.asInstanceOf[ArrayData]
+    if (elementsNullable && NativeKernels.hasNull(vec)) null
+    else NativeKernels.rhpSig(vec, planes, seed, isDouble)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.NativeKernels.rhpSig($c, $planes, ${seed}L, $isDouble)")
+    nullSafeCodeGen(ctx, ev, c => {
+      val sig = s"${ev.value} = graft.expressions.NativeKernels.rhpSig(" +
+        s"$c, $planes, ${seed}L, $isDouble);"
+      if (!elementsNullable) sig
+      else s"if (graft.expressions.NativeKernels.hasNull($c)) " +
+        s"${ev.isNull} = true; else $sig"
+    })
 
   override protected def withNewChildInternal(newChild: Expression): RhpSignature64 =
     copy(child = newChild)

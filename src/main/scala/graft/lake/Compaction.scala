@@ -213,7 +213,7 @@ object Compaction {
       !cur.mor && (nB % cur.nBuckets == 0 || cur.nBuckets % nB == 0)
     val stamped = graft.model.Schemas.stampFieldIds(withB, cur.schema)
     val writer = (if (alignedRebucket) stamped
-                  else stamped.repartition(nB, col("b")))
+                  else stamped.repartitionById(nB, col("b")))
       .sortWithinPartitions(sortCols: _*)
       .write.options(LakeIO.bloomWriteOptions(ks.bucketCols.head))
       .partitionBy("b")

@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
@@ -281,8 +282,7 @@ object ParquetFooters {
   private def countBooleanTrue(path: String, column: String): Option[Long] = {
     import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
     try {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(path), conf))
+      val reader = open(path)
       try {
         val fileSchema = reader.getFooter.getFileMetaData.getSchema
         if (!fileSchema.containsField(column)) return Some(0L)
@@ -351,8 +351,7 @@ object ParquetFooters {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.io.api.Binary
     try {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(path), conf))
+      val reader = open(path)
       try {
         val colDesc = reader.getFooter.getFileMetaData.getSchema
           .getColumns.asScala.find(_.getPath.mkString(".") == column)
@@ -430,17 +429,30 @@ object ParquetFooters {
 
   private def withFooter[A](path: String)(
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf))
+    val reader = open(path)
     try f(reader.getFooter) finally reader.close()
   }
 
+  // Read options come from the shared, already-loaded `conf`: the one-arg
+  // `open(InputFile)` re-parses Hadoop's XML defaults into a fresh
+  // Configuration on every open, which costs more than the footer read
+  // itself. They are built per open: a reader's codec factory is not
+  // thread-safe, and parMap decodes files in parallel.
+  private def open(path: String): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
+      HadoopReadOptions.builder(conf).build())
+
+  // One pool for every footer fan-out (its workers are daemon threads that
+  // idle out), instead of a new pool — and new threads — per call.
+  private lazy val footerPool =
+    new scala.collection.parallel.ForkJoinTaskSupport(
+      new java.util.concurrent.ForkJoinPool(16))
+
   /** Parallel map over independent footer reads. */
-  def parMap[A, B](xs: Seq[A], threads: Int = 16)(f: A => B): Seq[B] = {
+  def parMap[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
     import scala.collection.parallel.CollectionConverters._
     val par = xs.par
-    par.tasksupport = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(threads))
+    par.tasksupport = footerPool
     par.map(f).seq
   }
 }

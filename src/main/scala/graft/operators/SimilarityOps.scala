@@ -57,8 +57,9 @@ object SimilarityOps {
     * any parallelism. Returns a bigint bucket id.
     *
     * Two bit-identical implementations (NativeExpressionsSpec pins the
-    * equality): the declarative tree below for small shapes, and the
-    * fused-loop [[graft.expressions.RhpSignature64]] kernel once
+    * equality; a vector with a null element signs as NULL in both): the
+    * declarative tree below for small shapes, and the fused-loop
+    * [[graft.expressions.RhpSignature64]] kernel once
     * `planes > 16 || dim > 128` — at dim 768 the declarative form is
     * dim x planes xxhash64 nodes, which overwhelms whole-stage codegen. */
   def rhpSignature(vec: Column, dim: Int, planes: Int, seed: Long = 42L): Column =
@@ -78,7 +79,8 @@ object SimilarityOps {
         element_at(vec, i + 1).cast("double") *
           (pmod(h, lit(1000000L)).cast("double") / 1000000.0 - 0.5)
       }.reduce(_ + _)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
+      // a null element nulls `proj` and with it the whole signature
+      when(proj >= 0, lit(1L << p)).when(proj < 0, lit(0L))
     }.reduce(_ + _)
 
   /** Planes needed so the expected bucket occupancy ~= targetBucketSize:

@@ -140,7 +140,7 @@ object SearchIndex {
       .withColumn("b", CdcApply.bucketOfCols(Seq(col("term")), nB))
     val dataDir = index.newDataDir(snapshotId)
     withB
-      .repartition(math.max(nB, 1), col("b"))
+      .repartitionById(math.max(nB, 1), col("b"))
       .sortWithinPartitions("b", "term", "conv_id", "turn_idx")
       // term blooms: `search` point-looks-up each query term over the
       // bucket's delta chain — same membership pruning as the main lake's

@@ -275,14 +275,15 @@ object GraftDml {
       require(!cn.startsWith("_") && cn != "op",
         s"internal column $cn cannot be SET")
     })
-    // on the BY SOURCE leg the source side of the full-outer join is all
-    // NULLs — an expression naming the source alias would silently null the
-    // column; standard MERGE dialects reject it, so do we
+    // on the BY SOURCE leg every source column is NULL, so a SET naming one
+    // would silently null the column: it must resolve on the target alone
+    lazy val tgtOnly = GraftSql.table(spark, lake.root).alias(tAlias)
     bySourceSets.foreach(_.foreach { case (c, e) =>
-      val noLits = e.replaceAll("'(?:[^']|'')*'", "''")
-      require(!s"\\b$sAlias\\s*\\.".r.findFirstIn(noLits).isDefined,
-        s"NOT MATCHED BY SOURCE UPDATE cannot reference source alias " +
-        s"$sAlias (source columns are NULL on that leg): $c = $e")
+      val err = scala.util.Try(tgtOnly.select(expr(e))).failed.toOption
+      require(err.isEmpty,
+        s"NOT MATCHED BY SOURCE UPDATE must resolve against $tAlias alone " +
+        s"(source columns are NULL on that leg): $c = $e: " +
+        err.map(_.getMessage).orNull)
     })
 
     withConflictRetry(maxAttempts) {

@@ -3,6 +3,7 @@ package graft.cdc
 import scala.collection.mutable
 
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +20,28 @@ import graft.lake.LakeTable
 class MergePlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  // every exchange kind (hash, range, direct partition id, broadcast, ...)
+  private val exchangeRe = raw"\b\w*Exchange\b".r
+  // shuffle exchange partition counts: the last argument of the
+  // partitioning (`Exchange hashpartitioning(b#1, 32), ...`), or 1 for
+  // `Exchange SinglePartition, ...`
+  private def shuffleWidths(p: String): Seq[Int] =
+    raw"\bExchange (\w+)(?:\((.*), (\d+)\))?,".r.findAllMatchIn(p).map { m =>
+      if (m.group(1) == "SinglePartition") 1 else m.group(3).toInt
+    }.toSeq
+  private def finalPlan(p0: String): String = p0.split("== Initial Plan ==")(0)
+  private def shape(p: String): (Int, Int) = (
+    exchangeRe.findAllIn(p).size, raw"\bSort \[".r.findAllIn(p).size)
+  // records every executed plan; delivery is asynchronous
+  private def recorder(plans: mutable.ArrayBuffer[String]) =
+    new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString; () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+
   test("merge+write plan: one exchange, one sort, streaming dedup operator") {
     val dir = TestSpark.tmpDir("plan-cl")
     ChangelogGen.write(spark, dir, ChangelogGen.Config(
@@ -27,13 +50,7 @@ class MergePlanSpec extends AnyFunSuite {
     val lake = new LakeTable(spark, TestSpark.tmpDir("plan-lake"))
 
     val plans = mutable.ArrayBuffer[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString; () }
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
+    val listener = recorder(plans)
     spark.listenerManager.register(listener)
     try {
       new CdcDriver(spark, dir, lake, segmentsPerBatch = 2, nBuckets = 8,
@@ -52,10 +69,8 @@ class MergePlanSpec extends AnyFunSuite {
       writePlans.foreach { p0 =>
         // adaptive plans print "Final Plan" and "Initial Plan" sections —
         // count only the final one
-        val p = p0.split("== Initial Plan ==")(0)
-        val exchanges = "Exchange (hash|range)partitioning".r
-          .findAllIn(p).size
-        val sorts = raw"\bSort \[".r.findAllIn(p).size
+        val p = finalPlan(p0)
+        val (exchanges, sorts) = shape(p)
         assert(exchanges == 1, s"merge plan must have ONE exchange:\n$p")
         assert(sorts == 1, s"merge plan must have ONE sort:\n$p")
         assert(!p.contains("Window"),
@@ -66,7 +81,7 @@ class MergePlanSpec extends AnyFunSuite {
         // tree prints children below their parent, so everything from the
         // Exchange line onward is the map side — _bk/_kh must not appear
         // there.
-        val mapSide = p.substring(p.indexOf("Exchange hashpartitioning"))
+        val mapSide = p.substring(exchangeRe.findFirstMatchIn(p).get.start)
         assert(!mapSide.contains("_bk") && !mapSide.contains("_kh"),
           s"sort-prefix columns must not ride the shuffle:\n$p")
       }
@@ -81,18 +96,7 @@ class MergePlanSpec extends AnyFunSuite {
     val lake = new LakeTable(spark, TestSpark.tmpDir("plan-mor-lake"))
 
     val plans = mutable.ArrayBuffer[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString; () }
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    def finalPlan(p0: String): String = p0.split("== Initial Plan ==")(0)
-    def shape(p: String): (Int, Int) = (
-      "Exchange (hash|range)partitioning".r.findAllIn(p).size,
-      raw"\bSort \[".r.findAllIn(p).size)
-
+    val listener = recorder(plans)
     spark.listenerManager.register(listener)
     try {
       new CdcDriver(spark, dir, lake, segmentsPerBatch = 1, nBuckets = 8,
@@ -140,6 +144,67 @@ class MergePlanSpec extends AnyFunSuite {
           s"MoR read must resolve in one exchange + one sort:\n$p")
         assert(!p.contains("Window"), s"no WindowExec on the read:\n$p")
       }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("CoW merge: one reduce partition and one file per touched bucket") {
+    import spark.implicits._
+    def batch(keys: Seq[String], lsn0: Long) =
+      keys.zipWithIndex.map { case (k, i) => (k, 0, lsn0 + i) }
+        .toDF("conv_id", "turn_idx", "_lsn")
+        .withColumn("op", lit("U"))
+        .withColumn("text", col("_lsn").cast("string"))
+        .withColumn("_src_part", lit(0))
+        .withColumn("_src_off", col("_lsn"))
+
+    val plans = mutable.ArrayBuffer[String]()
+    val listener = recorder(plans)
+    // apply a batch and return the merge write plan it ran
+    def applied(lake: LakeTable, keys: Seq[String], epoch: Long,
+                nBuckets: Int): (CdcApply.ApplyStats, String) = {
+      plans.synchronized(plans.clear())
+      val st = CdcApply.apply(lake, batch(keys, epoch * 100000L), epoch,
+        nBuckets)
+      val deadline = System.nanoTime() + 10e9.toLong
+      def mergePlan = plans.synchronized(plans.find(p =>
+        p.contains("WriteFiles") && p.contains("SortedLwwDedup")))
+      while (System.nanoTime() < deadline && mergePlan.isEmpty)
+        Thread.sleep(50)
+      val plan = mergePlan
+      assert(plan.isDefined, "merge write plan not captured")
+      (st, finalPlan(plan.get))
+    }
+    def check(lake: LakeTable, keys: Seq[String], epoch: Long, nBuckets: Int,
+              touched: Int): Unit = {
+      val (st, p) = applied(lake, keys, epoch, nBuckets)
+      assert(st.touchedSet.size == touched, s"touched ${st.touchedSet}")
+      assert(shape(p) == ((1, 1)), s"one exchange + one sort:\n$p")
+      assert(shuffleWidths(p) == Seq(st.touchedSet.size),
+        s"one reduce partition per touched bucket ${st.touchedSet}:\n$p")
+      val written = st.snapshot.files
+        .filter(_.path.contains(s"/snap-${st.snapshot.snapshotId}-"))
+      assert(written.map(_.bucket).sorted == st.touchedSet.toSeq.sorted,
+        s"one file per touched bucket: ${written.map(_.path)}")
+      assert(!spark.read.parquet(written.head.path).columns.contains("_p"),
+        "the partition id column must not reach the files")
+    }
+
+    spark.listenerManager.register(listener)
+    try {
+      // dense: >= 64 rows per bucket touches all 8 buckets (rank = bucket)
+      val dense = new LakeTable(spark, TestSpark.tmpDir("plan-direct-dense"))
+      val denseKeys = (0 until 800).map(i => f"conv-$i%05d")
+      check(dense, denseKeys, 1, 8, 8)
+      check(dense, denseKeys.take(600), 2, 8, 8) // merges with state
+      // sparse: 5 keys in each of 3 of 64 buckets (id = rank in touched set)
+      val sparse = new LakeTable(spark, TestSpark.tmpDir("plan-direct-sparse"))
+      val pick = (0 until 2000).map(i => f"conv-$i%05d")
+        .groupBy(LakeTable.bucketOfValue(_, 64)).toSeq.sortBy(_._1)
+        .take(3).flatMap(_._2.take(5))
+      check(sparse, pick, 1, 64, 3)
+      check(sparse, pick.drop(5), 2, 64, 2) // the two higher buckets
+      check(sparse, pick.take(1), 3, 64, 1)
+      assert(sparse.read().count() == pick.size)
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -89,4 +89,37 @@ class NativeExpressionsSpec extends AnyFunSuite {
       spark.sql("SELECT graft_zvalue(1L)").collect()
     }
   }
+
+  test("RHP signature: a null element signs as NULL in both forms") {
+    registered()
+    import spark.implicits._
+    import graft.operators.SimilarityOps
+    val vecs = Seq(
+      Seq[java.lang.Double](0.5, -0.25, 0.125, 1.0),
+      Seq[java.lang.Double](-0.5, 0.75, null, 1.0),
+      null)
+    val local = vecs.zipWithIndex.toDF("v", "id")
+    // dim 4: 8 planes picks the declarative tree inside rhpSignature, 20
+    // planes the native kernel; each form is also checked on its own, both
+    // interpreted (local relation) and code-generated (after a shuffle,
+    // with codegen fallback off so a broken kernel call cannot hide)
+    val codegenFallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try Seq(local, local.repartition(2)).foreach { df =>
+      Seq(8, 20).foreach { planes =>
+        val forms = Seq(
+          SimilarityOps.rhpSignature(col("v"), 4, planes),
+          SimilarityOps.rhpSignatureDeclarative(col("v"), 4, planes),
+          call_function("graft_rhpsig64", col("v"), lit(planes), lit(42L)))
+        val rows = df.select(col("id") +: forms: _*).collect()
+          .map(r => r.getInt(0) -> (1 to 3).map(i => Option(r.get(i)))).toMap
+        assert(rows(0).forall(_ == rows(0).head) && rows(0).head.isDefined,
+          s"planes=$planes: forms disagree on a null-free vector ${rows(0)}")
+        assert(rows(1) == Seq(None, None, None),
+          s"planes=$planes: a null element must sign as NULL ${rows(1)}")
+        assert(rows(2) == Seq(None, None, None),
+          s"planes=$planes: a NULL vector must sign as NULL ${rows(2)}")
+      }
+    } finally spark.conf.set("spark.sql.codegen.fallback", codegenFallback)
+  }
 }

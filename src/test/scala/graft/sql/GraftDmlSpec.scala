@@ -283,6 +283,32 @@ class GraftDmlSpec extends AnyFunSuite {
       "the one source-matched row keeps its image")
   }
 
+  test("MERGE BY SOURCE UPDATE: SET must resolve on the target alone") {
+    val lake = seed("dml-merge-bysrc-guard")
+    import spark.implicits._
+    Seq(("conv00", 0, "x")).toDF("conv_id", "turn_idx", "text")
+      .createOrReplaceTempView("guard_src")
+    val merge = "MERGE INTO lake AS t USING guard_src AS s " +
+      "ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx " +
+      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET "
+    // a backtick-quoted alias still names a source column
+    val e = intercept[IllegalArgumentException] {
+      GraftDml.sql(lake, merge + "text = `s`.text")
+    }
+    assert(e.getMessage.contains("must resolve against t alone"))
+    assert(e.getMessage.contains("UNRESOLVED_COLUMN"))
+    assert(lake.read().filter(col("text").isNull).count() == 0)
+    // any other analysis error keeps its own cause in the message
+    val fn = intercept[IllegalArgumentException] {
+      GraftDml.sql(lake, merge + "text = upperr(t.text)")
+    }
+    assert(fn.getMessage.contains("UNRESOLVED_ROUTINE"))
+    // a double-quoted string that contains the alias is a literal
+    val st = GraftDml.sql(lake, merge + "role = \"s.stale\"")
+    assert(st.rowsIn == 95)
+    assert(lake.read().filter(col("role") === "s.stale").count() == 95)
+  }
+
   test("MERGE refusals: non-key ON, missing alias, key SET") {
     val lake = seed("dml-merge-refuse")
     intercept[IllegalArgumentException] {
