@@ -20,35 +20,6 @@ import graft.lake.LakeTable
  * Per-batch metrics (rows/sec) are printed as one JSON line each and stored
  * in the snapshot metadata (north rule: per-batch rows/sec + lineage).
  */
-object CdcDriver {
-  /** Effective retention for a run: the caller's `keepSnapshots`, floored
-    * when a derived table or search index is attached (their catch-up /
-    * refresh base must never be expired from under them); 0 = keep
-    * everything. With a BATCHED index refresh (`indexEvery` > 1) the
-    * index's diff base lags up to `indexEvery` main commits — each possibly
-    * paired with a fold maintenance commit — so the floor grows to
-    * 2 x indexEvery. Shared by the batch driver and the streaming tailer. */
-  private[cdc] def effectiveKeep(keepSnapshots: Int, hasDerived: Boolean,
-                                 indexEvery: Int = 1): Int =
-    if (keepSnapshots <= 0) 0
-    else if (hasDerived)
-      math.max(keepSnapshots, math.max(2, 2 * math.max(indexEvery, 1)))
-    else keepSnapshots
-
-  /** Per-batch retention step shared by the batch driver and the tailer. */
-  private[cdc] def expireRetained(lake: LakeTable, aggLake: Option[LakeTable],
-                                  keep: Int,
-                                  replica: Option[LakeTable] = None,
-                                  matView: Option[LakeTable] = None): Unit =
-    if (keep > 0) {
-      lake.expireSnapshots(keep)
-      aggLake.foreach(_.expireSnapshots(keep))
-      replica.foreach(_.expireSnapshots(keep))
-      matView.foreach(_.expireSnapshots(keep))
-      ()
-    }
-}
-
 final class CdcDriver(
     spark: SparkSession,
     changelogDir: String,
@@ -79,9 +50,9 @@ final class CdcDriver(
       * bucketed delta write per refresh, not per batch) and indexes a
       * hot key's text ONCE per window instead of once per update — the
       * posting write amplification that capped index-on replay
-      * throughput. The run's final batch always triggers a catch-up
-      * refresh, so a completed run leaves the index current; retention is
-      * floored at 2 x indexEvery so the diff base survives (effectiveKeep). */
+      * throughput. A completed run ends with a catch-up refresh, so it
+      * leaves the index current; retention keeps the index's diff base
+      * (see keepSnapshots). */
     indexEvery: Int = 1,
     /** snapshot retention: after each batch, expire all but the newest N
       * snapshots of the lake (and derived agg table), reclaiming data files
@@ -90,10 +61,11 @@ final class CdcDriver(
       * an unbounded-history 10^10-event replay would hold O(batches x
       * touched data) on disk; retention bounds that at O(N x table).
       * Trade: time travel / snapshot-diff change feeds reach back only N
-      * snapshots. When a derived table or search index is attached, the
-      * effective floor is 2 so their catch-up/refresh base (at most one
-      * snapshot behind, crash windows included) is never expired from
-      * under them. */
+      * snapshots. Retention also keeps every lake snapshot an attached
+      * follower still diffs from: the search index and the replica record
+      * the source snapshot they last folded, and nothing at or after the
+      * lower of the two expires (crash windows included). Derived tables
+      * keep N snapshots of their own history. */
     keepSnapshots: Int = 0,
     /** merge-on-read ingest (seeds a NEW table; an existing table's stored
       * mode wins): batches append per-bucket delta files instead of
@@ -135,28 +107,19 @@ final class CdcDriver(
       * quarantine). */
     format: String = "parquet") {
 
-  private val matViewCfg: Option[MatView.Config] =
-    if (matViewAggs.nonEmpty) Some(MatView.Config(matViewAggs)) else None
+  private val followers = new FollowerStep(spark, aggLake, matView,
+    matViewAggs, searchIndex, indexCompactChain, indexEvery, replica,
+    replicaWhere, replicaCols, keepSnapshots, morCompactChain)
+  private val feed = new FeedProbe(lake, partBase)
 
   /** Apply up to `maxBatches` pending micro-batches; returns per-batch stats.
     * Safe to call again after a crash or mid-run stop. */
   def run(maxBatches: Int = Int.MaxValue): Seq[CdcApply.ApplyStats] = {
-    // Derived-table catch-up: a crash between the main commit and the agg
-    // maintain leaves the agg table at an older epoch while the main batch
-    // is fenced on resume — reconcile from the lake commit log (also the
-    // path that backfills a derived table enabled after the fact).
-    aggLake.foreach(al => AggMaintenance.catchUp(spark, lake, al))
-    // SearchIndex.refresh is inherently catch-up (indexes from whatever
-    // source snapshot the index last saw) — one call heals a crash that
-    // landed between a main commit and its index refresh.
-    searchIndex.foreach(si => graft.search.SearchIndex.refresh(spark, lake, si))
-    // Replica.refresh is likewise catch-up (diffs from whatever source
-    // snapshot the replica last folded) — heals the same crash window.
-    replica.foreach(r =>
-      Replica.refreshAttached(spark, lake, r, replicaWhere, replicaCols))
-    // MatView.catchUp heals the same crash window AND backfills a view
-    // attached after the fact (new views need the declared agg list).
-    matView.foreach(v => MatView.catchUp(spark, lake, v, matViewCfg))
+    // Follower catch-up: a crash between a main commit and its upkeep
+    // leaves a follower behind while the main batch is fenced on resume —
+    // reconcile from the lake commit log (also the path that backfills a
+    // follower attached after the fact).
+    followers.catchUp(lake)
     val segs = ChangelogGen.listSegments(changelogDir)
     // EPOCH-DOMAIN GUARDS (round-3 advice): epochs are only comparable
     // within one driver discipline. An UNNAMED replay resumes from the
@@ -187,12 +150,13 @@ final class CdcDriver(
       }).getOrElse(0L)
     val pending = segs.filter(_ >= applied)
     val out = scala.collection.mutable.ArrayBuffer[CdcApply.ApplyStats]()
-    var appliedBatches = 0L
     pending.grouped(segmentsPerBatch).take(maxBatches).foreach { group =>
       val paths = group.map(s => s"$changelogDir/seg=$s")
       val probe =
         if (format == "json") None // no footers; merge runs its probe scan
-        else CdcApply.phase("driver-footer-probe") { probeFromFooters(paths) }
+        else CdcApply.phase("driver-footer-probe") {
+          feed.probe(FooterProbe.fromSegDirs(paths, _, _))
+        }
       // The footer probe already read every file's footer — its embedded
       // Spark schema JSONs give the batch's (additively merged) schema for
       // free, so the usual distributed mergeSchema inference job (a serial
@@ -211,54 +175,13 @@ final class CdcDriver(
       }
       // `seg=`/`p=` path dirs (sharded binlog layout) surface as partition
       // columns duplicating the data; their real job is footer probing
-      val batch1 = batch0.drop("p", "seg")
-      // multi-feed: namespace this feed's partition ids (data + lineage)
-      val batch =
-        if (partBase == 0) batch1
-        else batch1.withColumn("_src_part",
-          org.apache.spark.sql.functions.col("_src_part") +
-            org.apache.spark.sql.functions.lit(partBase))
-      val shiftedProbe =
-        if (partBase == 0) probe
-        else probe.map(p => p.copy(lineage = p.lineage.map(l =>
-          l.copy(srcPart = l.srcPart + partBase))))
+      val batch = feed.shift(batch0.drop("p", "seg"))
       // epoch = exclusive upper segment bound -> fencing token
       val epoch = group.max + 1
       val stats = CdcApply.apply(lake, batch, epoch, nBuckets, saltBuckets,
-        probeInfo = shiftedProbe, patchEnabled = patchEnabled,
+        probeInfo = probe, patchEnabled = patchEnabled,
         changeFeed = changeFeed, mor = mor, source = source)
-      // LSM merge policy: bound the MoR delta chains before derived-table /
-      // retention work (the fold is a maintenance commit at the same epoch)
-      if (!stats.skipped && lake.currentSnapshot.exists(_.mor))
-        CdcApply.maybeFold(lake, morCompactChain)
-      // derived tables key on the COMMITTED global epoch (== the driver's
-      // epoch for a single feed; distinct from the per-source epoch when
-      // several feeds interleave)
-      aggLake.foreach { al =>
-        if (!stats.skipped && stats.touchedSet.nonEmpty)
-          AggMaintenance.maintain(spark, lake, al, stats.touchedSet,
-            stats.snapshot.epoch)
-      }
-      matView.foreach { v =>
-        if (!stats.skipped && stats.touchedSet.nonEmpty)
-          MatView.maintain(spark, lake, v, stats.touchedSet,
-            stats.snapshot.epoch, aggs = matViewCfg)
-      }
-      val keep = CdcDriver.effectiveKeep(keepSnapshots,
-        aggLake.isDefined || searchIndex.isDefined || replica.isDefined ||
-          matView.isDefined, indexEvery)
-      if (!stats.skipped) {
-        appliedBatches += 1
-        searchIndex.foreach { si =>
-          if (indexEvery <= 1 || appliedBatches % indexEvery == 0) {
-            graft.search.SearchIndex.refresh(spark, lake, si)
-            graft.search.SearchIndex.maybeCompact(si, indexCompactChain, keep)
-          }
-        }
-        replica.foreach(r =>
-          Replica.refreshAttached(spark, lake, r, replicaWhere, replicaCols))
-      }
-      CdcDriver.expireRetained(lake, aggLake, keep, replica, matView)
+      followers.afterCommit(lake, stats)
       out += stats
       if (!quiet) {
         val s = stats
@@ -273,31 +196,9 @@ final class CdcDriver(
           s""""skipped":${s.skipped},"changeFeed":{$cf}}""")
       }
     }
-    // batched refresh: the window may end mid-cycle — catch the index up so
-    // a completed run always leaves it current (fenced no-op when it is)
-    if (indexEvery > 1 && appliedBatches > 0) searchIndex.foreach { si =>
-      graft.search.SearchIndex.refresh(spark, lake, si)
-      graft.search.SearchIndex.maybeCompact(si, indexCompactChain,
-        CdcDriver.effectiveKeep(keepSnapshots, hasDerived = true, indexEvery))
-    }
+    // batched refresh: the window may end mid-cycle — a completed run
+    // leaves every follower current (fenced no-op when it is)
+    followers.catchUp(lake)
     out.toSeq
-  }
-
-  /** Per-source-partition lineage + row count for a batch straight from the
-    * footers of the changelog's parquet files under `seg=N/p=P/` (driver
-    * metadata IO only; no cluster scan — shared with the streaming tailer,
-    * see [[FooterProbe]]). Returns None if the layout lacks `p=` dirs (flat
-    * segments fall back to the probe scan).
-    *
-    * The null-free proof must cover the LAKE'S OWN key columns: probing the
-    * transcript names against a generic-key table would "prove" the wrong
-    * columns null-free and let a null real key skip validation — so the spec
-    * comes from the current snapshot (fresh lakes seed as transcripts, which
-    * is also what this driver's CdcApply call seeds). */
-  private def probeFromFooters(segDirs: Seq[String]): Option[CdcApply.ProbeInfo] = {
-    val ks = lake.currentSnapshot.map(_.keySpec)
-      .getOrElse(graft.model.Schemas.KeySpec.transcripts)
-    FooterProbe.fromSegDirs(segDirs, ks.keyCols.toSet + "_lsn",
-      bucketKeys = ks.bucketCols)
   }
 }

@@ -303,7 +303,7 @@ object CdcMain {
       // fixed-delay restart supervision (reference: base-config.conf:27-28)
       // — a transient batch failure restarts the tailer from its checkpoint
       // instead of ending an always-on deployment
-      CdcStream.runSupervised(spark, changelogDir, lake, ckptDir, inferred,
+      CdcStream.run(spark, changelogDir, lake, ckptDir, inferred,
         nBuckets = pos.headOption.map(_.toInt).getOrElse(64),
         saltBuckets = pos.lift(1).map(_.toInt).getOrElse(0),
         maxFilesPerTrigger = pos.lift(2).map(_.toInt).getOrElse(16),
@@ -324,6 +324,7 @@ object CdcMain {
         // checkpoint binding + epoch fencing; see replay)
         source = flag(rest, "source"),
         partBase = flag(rest, "partbase").map(_.toInt).getOrElse(0),
+        restartAttempts = 3,
         format = fmt)
       lake.currentSnapshot.foreach(s =>
         println(s"""{"snapshotId":${s.snapshotId},"epoch":${s.epoch}}"""))

@@ -62,11 +62,11 @@ object CdcStream {
         * batching amortizes the posting fan-out). A live tailer's index
         * lags at most N batches; a drained (AvailableNow) run may leave it
         * mid-window — the stream START catches it up, as does the `index`
-        * CLI. Retention floors at 2 x indexEvery (effectiveKeep). */
+        * CLI. Retention keeps the index's diff base (see keepSnapshots). */
       indexEvery: Int = 1,
       /** expire all but the newest N snapshots after each micro-batch
-        * (0 = keep everything); floor 2 when a derived table/index is
-        * attached — see CdcDriver.keepSnapshots */
+        * (0 = keep everything), never one an attached follower still diffs
+        * from — see CdcDriver.keepSnapshots */
       keepSnapshots: Int = 0,
       /** merge-on-read ingest (seeds a NEW lake; an existing lake's stored
         * mode wins — see CdcApply `mor`) */
@@ -98,20 +98,15 @@ object CdcStream {
         * ignored; the sidecar types the rows; no footer probe). */
       format: String = "parquet"): StreamingQuery = {
     bindOrRefuse(lake, checkpointDir, source)
-    // Derived-table reconciliation: if a crash landed between the main
-    // commit and the agg maintain, the replayed batch will fence and the
-    // per-batch maintain below never runs for it — catch up from the
-    // commit log before tailing (and again whenever a fenced batch shows
-    // the agg table lagging).
-    aggLake.foreach(al => AggMaintenance.catchUp(spark, lake, al))
-    val mvCfg =
-      if (matViewAggs.nonEmpty) Some(MatView.Config(matViewAggs)) else None
-    matView.foreach(v => MatView.catchUp(spark, lake, v, mvCfg))
-    // batched index refresh: a prior drained run may have ended mid-window
-    // — catch the index up before tailing (fenced no-op when current)
-    if (indexEvery > 1)
-      searchIndex.foreach(si => graft.search.SearchIndex.refresh(spark, lake, si))
-    var appliedBatches = 0L
+    val followers = new FollowerStep(spark, aggLake, matView, matViewAggs,
+      searchIndex, indexCompactChain, indexEvery, replica, replicaWhere,
+      replicaCols, keepSnapshots, morCompactChain)
+    // Follower reconciliation: a crash between a main commit and its
+    // upkeep leaves a follower behind while the replayed batch fences, and
+    // a drained run may end mid index window — catch up from the commit
+    // log before tailing.
+    followers.catchUp(lake)
+    val feed = new FeedProbe(lake, partBase)
     val src =
       if (format == "json") {
         val rs = graft.changelog.JsonChangelog.rowSchema(changelogDir)
@@ -138,70 +133,33 @@ object CdcStream {
         // own input files: with it the merge is the batch's ONLY data pass
         // (validation rides the merge's observe; no lineage probe scan) —
         // without it a live tailer pays a standing ~2x read amplification.
-        // The null-free proof covers the LAKE'S key columns (a key spec is
-        // immutable once the table exists, so reading it per-batch only
-        // matters until the first commit seeds it).
-        val ks = lake.currentSnapshot.map(_.keySpec)
-          .getOrElse(graft.model.Schemas.KeySpec.transcripts)
-        val probe0 =
-          if (format == "json") None // text shards carry no footers
-          else FooterProbe.fromInputFiles(batch.inputFiles.toSeq,
-            ks.keyCols.toSet + "_lsn", bucketKeys = ks.bucketCols)
-        // multi-feed: namespace this feed's partition ids (data + lineage)
-        val shifted =
-          if (partBase == 0) batch
-          else batch.withColumn("_src_part",
-            org.apache.spark.sql.functions.col("_src_part") +
-              org.apache.spark.sql.functions.lit(partBase))
         val probe =
-          if (partBase == 0) probe0
-          else probe0.map(p => p.copy(lineage = p.lineage.map(l =>
-            l.copy(srcPart = l.srcPart + partBase))))
-        val stats = CdcApply.apply(lake, shifted, epoch = batchId + 1,
+          if (format == "json") None // text shards carry no footers
+          else feed.probe(
+            FooterProbe.fromInputFiles(batch.inputFiles.toSeq, _, _))
+        val stats = CdcApply.apply(lake, feed.shift(batch), epoch = batchId + 1,
           nBuckets, saltBuckets, probeInfo = probe,
           patchEnabled = patchEnabled, changeFeed = changeFeed, mor = mor,
           source = source)
-        // LSM merge policy: bound the MoR delta chains per micro-batch
-        if (!stats.skipped && lake.currentSnapshot.exists(_.mor))
-          CdcApply.maybeFold(lake, morCompactChain)
-        // derived tables key on the COMMITTED global epoch (== batchId+1
-        // for a single feed; distinct when several feeds interleave)
-        aggLake.foreach { al =>
-          if (!stats.skipped && stats.touchedSet.nonEmpty)
-            AggMaintenance.maintain(spark, lake, al, stats.touchedSet,
-              epoch = stats.snapshot.epoch)
-          else if (stats.skipped)
-            AggMaintenance.catchUp(spark, lake, al)
-        }
-        matView.foreach { v =>
-          if (!stats.skipped && stats.touchedSet.nonEmpty)
-            MatView.maintain(spark, lake, v, stats.touchedSet,
-              epoch = stats.snapshot.epoch, aggs = mvCfg)
-          else if (stats.skipped)
-            MatView.catchUp(spark, lake, v, mvCfg)
-        }
-        val keep = CdcDriver.effectiveKeep(keepSnapshots,
-          aggLake.isDefined || searchIndex.isDefined || replica.isDefined ||
-            matView.isDefined, indexEvery)
-        if (!stats.skipped) appliedBatches += 1
-        searchIndex.foreach { si =>
-          if (indexEvery <= 1 ||
-              (!stats.skipped && appliedBatches % indexEvery == 0)) {
-            graft.search.SearchIndex.refresh(spark, lake, si)
-            // LSM merge policy: a live tailer refreshes the index per
-            // window, so chains grow without bound unless merged here
-            graft.search.SearchIndex.maybeCompact(si, indexCompactChain, keep)
-          }
-        }
-        replica.foreach(r =>
-          Replica.refreshAttached(spark, lake, r, replicaWhere, replicaCols))
-        CdcDriver.expireRetained(lake, aggLake, keep, replica, matView)
-        ()
+        followers.afterCommit(lake, stats)
       }
       .start()
   }
 
-  /** Run to termination (AvailableNow: drain-and-exit). */
+  /** Run to termination (AvailableNow: drain-and-exit; a live trigger runs
+    * until the caller stops the query) under fixed-delay restart
+    * supervision: a failed stream (one transient FS hiccup would otherwise
+    * end the deployment) restarts from its checkpoint up to
+    * `restartAttempts` times, `restartDelayMs` apart (0 attempts = start
+    * once and rethrow a failure) — the reference runs every job under
+    * exactly this policy (jobs-core base-config.conf:27-28
+    * `restart-strategy fixed-delay, attempts 3, delay 30s`;
+    * FlinkUtil.scala:37). A successful stop (caller
+    * `stop()`, or AvailableNow drain) ends supervision; a batch that keeps
+    * failing exhausts the attempts and rethrows the LAST failure loudly.
+    * Progress RESETS the attempt budget (any committed batch means the
+    * stream is healthy again), so a long-lived tailer doesn't die on the
+    * 4th transient hiccup of its lifetime. */
   def run(
       spark: SparkSession,
       changelogDir: String,
@@ -219,56 +177,7 @@ object CdcStream {
       indexCompactChain: Int = 16,
       indexEvery: Int = 1,
       keepSnapshots: Int = 0,
-      mor: Boolean = false,
-      morCompactChain: Int = 16,
-      replica: Option[LakeTable] = None,
-      replicaWhere: String = "",
-      replicaCols: Seq[String] = Nil,
-      matView: Option[LakeTable] = None,
-      matViewAggs: Seq[MatView.AggCol] = Nil,
-      source: Option[String] = None,
-      partBase: Int = 0,
-      format: String = "parquet"): Unit =
-    start(spark, changelogDir, lake, checkpointDir, schema, nBuckets,
-      saltBuckets, maxFilesPerTrigger, aggLake, trigger, patchEnabled,
-      changeFeed, searchIndex, indexCompactChain,
-      indexEvery = indexEvery,
-      keepSnapshots = keepSnapshots, mor = mor,
-      morCompactChain = morCompactChain, replica = replica,
-      replicaWhere = replicaWhere,
-      replicaCols = replicaCols, matView = matView, matViewAggs = matViewAggs,
-      source = source, partBase = partBase,
-      format = format).awaitTermination()
-
-  /** Always-on tailer with fixed-delay restart supervision: a failed stream
-    * (one transient FS hiccup would otherwise end the deployment) restarts
-    * from its checkpoint up to `restartAttempts` times, `restartDelayMs`
-    * apart — the reference runs every job under exactly this policy
-    * (jobs-core base-config.conf:27-28 `restart-strategy fixed-delay,
-    * attempts 3, delay 30s`; FlinkUtil.scala:37). A successful stop (caller
-    * `stop()`, or AvailableNow drain) ends supervision; a batch that keeps
-    * failing exhausts the attempts and rethrows the LAST failure loudly.
-    * Progress RESETS the attempt budget (any committed batch means the
-    * stream is healthy again), so a long-lived tailer doesn't die on the
-    * 4th transient hiccup of its lifetime. */
-  def runSupervised(
-      spark: SparkSession,
-      changelogDir: String,
-      lake: LakeTable,
-      checkpointDir: String,
-      schema: StructType,
-      nBuckets: Int = 64,
-      saltBuckets: Int = 0,
-      maxFilesPerTrigger: Int = 16,
-      aggLake: Option[LakeTable] = None,
-      trigger: Trigger = Trigger.AvailableNow(),
-      patchEnabled: Boolean = false,
-      changeFeed: Boolean = true,
-      searchIndex: Option[LakeTable] = None,
-      indexCompactChain: Int = 16,
-      indexEvery: Int = 1,
-      keepSnapshots: Int = 0,
-      restartAttempts: Int = 3,
+      restartAttempts: Int = 0,
       restartDelayMs: Long = 30000L,
       mor: Boolean = false,
       morCompactChain: Int = 16,

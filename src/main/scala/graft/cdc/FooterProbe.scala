@@ -52,7 +52,7 @@ object FooterProbe {
     * Returns None when the layout lacks `p=` dirs (flat segments fall back
     * to CdcApply's probe scan). */
   def fromSegDirs(segDirs: Seq[String], keyCols: Set[String],
-                  bucketKeys: Seq[String] = Seq("conv_id"))
+                  bucketKeys: Seq[String])
       : Option[CdcApply.ProbeInfo] = {
     val perPart = segDirs.flatMap { d =>
       graft.lake.LakeIO.list(d)
@@ -70,7 +70,7 @@ object FooterProbe {
     * `DataFrame.inputFiles`): source partition parsed from the `/p=P/` path
     * component. Returns None if any file lacks it. */
   def fromInputFiles(paths: Seq[String], keyCols: Set[String],
-                     bucketKeys: Seq[String] = Seq("conv_id"))
+                     bucketKeys: Seq[String])
       : Option[CdcApply.ProbeInfo] = {
     val perPart = paths.map { p =>
       partRe.findFirstMatchIn(p) match {
@@ -85,7 +85,7 @@ object FooterProbe {
     * populated file lacks `_src_off` footer stats (recording corrupted
     * lineage bounds would be worse than one probe scan). */
   def fromFiles(perPart: Seq[(Int, String)], keyCols: Set[String],
-                bucketKeys: Seq[String] = Seq("conv_id"))
+                bucketKeys: Seq[String])
       : Option[CdcApply.ProbeInfo] = {
     if (perPart.isEmpty) return None
     val stats = graft.lake.ParquetFooters.parMap(perPart) { case (part, path) =>
@@ -120,4 +120,34 @@ object FooterProbe {
         if (stats.exists(_._5.isEmpty)) Nil
         else stats.flatMap(_._5).distinct))
   }
+}
+
+/** One feed's footer probe against one lake, shared by the batch driver and
+  * the tailer. The null-free proof covers the LAKE'S OWN key columns:
+  * probing the transcript names against a generic-key table would "prove"
+  * the wrong columns null-free and let a null real key skip validation (a
+  * fresh lake seeds as transcripts, which is also what both loops' merge
+  * seeds; the spec is fixed once that first commit lands). Multi-feed
+  * ingest namespaces the feed's partition ids by `partBase`, in the data
+  * and in the probe's lineage alike. */
+private[cdc] final class FeedProbe(lake: graft.lake.LakeTable, partBase: Int) {
+
+  /** Probe a batch's files: `probeFiles` is [[FooterProbe.fromSegDirs]] or
+    * [[FooterProbe.fromInputFiles]] applied to them. */
+  def probe(probeFiles: (Set[String], Seq[String]) => Option[CdcApply.ProbeInfo])
+      : Option[CdcApply.ProbeInfo] = {
+    val ks = lake.currentSnapshot.map(_.keySpec)
+      .getOrElse(graft.model.Schemas.KeySpec.transcripts)
+    val p = probeFiles(ks.keyCols.toSet + "_lsn", ks.bucketCols)
+    if (partBase == 0) p
+    else p.map(p => p.copy(lineage = p.lineage.map(l =>
+      l.copy(srcPart = l.srcPart + partBase))))
+  }
+
+  /** The batch with its `_src_part` column namespaced. */
+  def shift(batch: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    if (partBase == 0) batch
+    else batch.withColumn("_src_part",
+      org.apache.spark.sql.functions.col("_src_part") +
+        org.apache.spark.sql.functions.lit(partBase))
 }
