@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.lake.{DataFileMeta, LakeTable, PartitionLineage, Snapshot}
+import graft.lake.{LakeTable, PartitionLineage, Snapshot}
 
 /**
  * The MERGE: applies one micro-batch of change events to the lake table.
@@ -225,6 +225,19 @@ object CdcApply {
         * should namespace `_src_part` per source (CdcDriver partBase). */
       source: Option[String] = None): ApplyStats = {
     val t0 = System.nanoTime()
+    // Lost a commit race to a concurrent applier (version file taken). The
+    // atomic link(2) publish is the arbiter: re-apply against the refreshed
+    // snapshot with ALL mode flags forwarded — if the winner already
+    // covered our epoch the retry is fenced at entry; a maintenance retry
+    // whose epoch moved fails loudly on the entry `require` instead of
+    // being silently fenced as a normal apply (a lost migration must never
+    // look like success); otherwise the merge recomputes over the winner's
+    // state (Iceberg-style commit retry; our data dir becomes an orphan
+    // that readers never see). Retries bounded by epoch progress.
+    def retry(): ApplyStats =
+      apply(lake, batch, epoch, nBuckets, saltBuckets, probeInfo, validate,
+        patchEnabled, changeFeed, maintenance, touchedHint, keys, mor, fold,
+        source)
     val cur = lake.currentSnapshot
     require(source.isEmpty || !maintenance,
       "maintenance applies are source-less (they consume no feed)")
@@ -488,12 +501,7 @@ object CdcApply {
         liveRows = cur.map(_.liveRows).getOrElse(0L))
       val committed =
         try lake.commit(snap, maintenance = maintenance)
-        catch {
-          case _: graft.lake.CommitConflictException =>
-            return apply(lake, batch, epoch, nBuckets, saltBuckets, probeInfo,
-              validate, patchEnabled, changeFeed, maintenance, touchedHint,
-              keys, mor, fold, source)
-        }
+        catch { case _: graft.lake.CommitConflictException => return retry() }
       return ApplyStats(committed, committed.snapshotId != snapshotId, rowsIn,
         0, 0, (System.nanoTime() - t0) / 1e9, Set.empty,
         failedEvents = nInvalid)
@@ -693,27 +701,10 @@ object CdcApply {
 
     // Per-file stats (row count + bucket-key min/max + INT32/INT64 zone
     // maps) straight from the parquet footers on the driver — no extra
-    // Spark job; O(files) metadata work, the same write-side metrics
-    // collection a real table format does. Key range stats are collected
-    // for a STRING leading bucket column (lookup pruning compares strings);
-    // other key types keep bucket pruning only. Zone maps feed
-    // LakeTable.scanRange (ts/_lsn/turn_idx file skipping).
-    val statsCol = ks.bucketCols.head
-    val statsIsString = targetSchema.fields.find(_.name == statsCol)
-      .exists(_.dataType == org.apache.spark.sql.types.StringType)
+    // Spark job. Zone maps feed LakeTable.scanRange (ts/_lsn/turn_idx file
+    // skipping).
     val newFiles = phase("stats") {
-      val work = listBucketFiles(dataDir).flatMap { case (b, paths) =>
-        paths.map(p => (b, p))
-      }
-      // footer reads are independent metadata fetches — parallelize
-      graft.lake.ParquetFooters.parMap(work) { case (b, p) =>
-        val st = graft.lake.ParquetFooters.writeStats(p,
-          if (statsIsString) Some(statsCol) else None)
-        DataFileMeta(p, b, st.rows, st.minKey, st.maxKey,
-          st.zoneCols, st.zoneMins, st.zoneMaxs, st.bytes,
-          st.liveRows, st.zoneNullFree, st.zoneFieldIds)
-      }
-    }
+      lake.writtenFiles(dataDir, ks.bucketCols.head, targetSchema) }
     val rowsOut = newFiles.map(_.rows).sum
     // The batch's real touched set: pre-computed for copy-on-write (it
     // drives the state read), derived from the written delta files for MoR
@@ -753,22 +744,7 @@ object CdcApply {
       liveRows = liveRows)
     val committed =
       try phase("commit") { lake.commit(snap, maintenance = maintenance) }
-      catch {
-        // Lost a commit race to a concurrent applier (version file taken).
-        // The atomic link(2) publish is the arbiter: re-apply against the
-        // refreshed snapshot with ALL mode flags forwarded — if the winner
-        // already covered our epoch the retry is fenced at entry; a
-        // maintenance retry whose epoch moved fails loudly on the entry
-        // `require` instead of being silently fenced as a normal apply
-        // (a lost migration must never look like success); otherwise the
-        // merge recomputes over the winner's state (Iceberg-style commit
-        // retry; our data dir becomes an orphan that readers never see).
-        // Retries bounded by epoch progress.
-        case _: graft.lake.CommitConflictException =>
-          return apply(lake, batch, epoch, nBuckets, saltBuckets, probeInfo,
-            validate, patchEnabled, changeFeed, maintenance, touchedHint,
-            keys, mor, fold, source)
-      }
+      catch { case _: graft.lake.CommitConflictException => return retry() }
     val skipped = committed.snapshotId != snapshotId // lost a fencing race
     ApplyStats(committed, skipped, rowsIn, rowsOut, touchedOut.size,
       durationSec, touchedOut, failedEvents = nInvalid,
@@ -957,15 +933,4 @@ object CdcApply {
     g.select(outCols: _*)
   }
 
-  /** bucket -> parquet files under a `b=<bucket>/` partitioned write dir
-    * (Hadoop FileSystem listing — works on any scheme). */
-  private def listBucketFiles(dir: String): Seq[(Int, Seq[String])] = {
-    graft.lake.LakeIO.list(dir)
-      .filter { case (name, _, isDir) => isDir && name.startsWith("b=") }
-      .map { case (name, path, _) =>
-        val b = name.stripPrefix("b=").toInt
-        b -> graft.lake.LakeIO.list(path)
-          .filter(_._1.endsWith(".parquet")).map(_._2)
-      }
-  }
 }

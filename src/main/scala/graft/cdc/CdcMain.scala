@@ -152,7 +152,9 @@ import graft.lake.LakeTable
  * (LSM merge policy, default 16; 0 = manual `index-compact` only); and
  * `keep=<n>`: snapshot retention — expire all but the newest n snapshots
  * after each batch, reclaiming superseded copy-on-write files (0 = keep
- * all; floor 2 with a derived table/index attached).
+ * all). An attached index or replica raises the count to keep every lake
+ * snapshot from the one it last folded up to the head, so its next diff
+ * base survives.
  *
  * `replay` and `stream` accept `rep=<dir>` with `rwhere=<sql>` and
  * `rcols=<a,b,c>`: maintain a filtered/projected row replica per batch

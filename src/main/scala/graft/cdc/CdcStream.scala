@@ -60,9 +60,10 @@ object CdcStream {
       /** refresh the index every N applied micro-batches (1 = per batch;
         * see CdcDriver.indexEvery — the refresh is a net snapshot diff, so
         * batching amortizes the posting fan-out). A live tailer's index
-        * lags at most N batches; a drained (AvailableNow) run may leave it
-        * mid-window — the stream START catches it up, as does the `index`
-        * CLI. Retention keeps the index's diff base (see keepSnapshots). */
+        * lags at most N batches; a query drained from `start` may leave it
+        * mid-window until the next start catches it up ([[run]] catches up
+        * when it ends, as does the `index` CLI). Retention keeps the
+        * index's diff base (see keepSnapshots). */
       indexEvery: Int = 1,
       /** expire all but the newest N snapshots after each micro-batch
         * (0 = keep everything), never one an attached follower still diffs
@@ -96,11 +97,35 @@ object CdcStream {
       /** changelog segment format: "parquet" (footer fast paths) or
         * "json" (Debezium-style envelopes via JsonChangelog — `schema` is
         * ignored; the sidecar types the rows; no footer probe). */
-      format: String = "parquet"): StreamingQuery = {
+      format: String = "parquet"): StreamingQuery =
+    tail(spark, changelogDir, lake, checkpointDir, schema, nBuckets,
+      saltBuckets, maxFilesPerTrigger, trigger, patchEnabled, changeFeed, mor,
+      source, partBase, onBatch, format,
+      new FollowerStep(spark, aggLake, matView, matViewAggs, searchIndex,
+        indexCompactChain, indexEvery, replica, replicaWhere, replicaCols,
+        keepSnapshots, morCompactChain))
+
+  /** [[start]] with its derived-state upkeep already built, so [[run]] can
+    * reuse one `followers` across restarts and catch it up after a drain. */
+  private def tail(
+      spark: SparkSession,
+      changelogDir: String,
+      lake: LakeTable,
+      checkpointDir: String,
+      schema: StructType,
+      nBuckets: Int,
+      saltBuckets: Int,
+      maxFilesPerTrigger: Int,
+      trigger: Trigger,
+      patchEnabled: Boolean,
+      changeFeed: Boolean,
+      mor: Boolean,
+      source: Option[String],
+      partBase: Int,
+      onBatch: Long => Unit,
+      format: String,
+      followers: FollowerStep): StreamingQuery = {
     bindOrRefuse(lake, checkpointDir, source)
-    val followers = new FollowerStep(spark, aggLake, matView, matViewAggs,
-      searchIndex, indexCompactChain, indexEvery, replica, replicaWhere,
-      replicaCols, keepSnapshots, morCompactChain)
     // Follower reconciliation: a crash between a main commit and its
     // upkeep leaves a follower behind while the replayed batch fences, and
     // a drained run may end mid index window — catch up from the commit
@@ -159,7 +184,8 @@ object CdcStream {
     * failing exhausts the attempts and rethrows the LAST failure loudly.
     * Progress RESETS the attempt budget (any committed batch means the
     * stream is healthy again), so a long-lived tailer doesn't die on the
-    * 4th transient hiccup of its lifetime. */
+    * 4th transient hiccup of its lifetime. After a successful stop every
+    * follower is caught up to the lake head. */
   def run(
       spark: SparkSession,
       changelogDir: String,
@@ -190,19 +216,16 @@ object CdcStream {
       partBase: Int = 0,
       onBatch: Long => Unit = _ => (),
       format: String = "parquet"): Unit = {
+    val followers = new FollowerStep(spark, aggLake, matView, matViewAggs,
+      searchIndex, indexCompactChain, indexEvery, replica, replicaWhere,
+      replicaCols, keepSnapshots, morCompactChain)
     var attempt = 0
     var running = true
     while (running) {
       val epochBefore = lake.currentSnapshot.map(_.epoch).getOrElse(0L)
-      val q = start(spark, changelogDir, lake, checkpointDir, schema,
-        nBuckets, saltBuckets, maxFilesPerTrigger, aggLake, trigger,
-        patchEnabled, changeFeed, searchIndex, indexCompactChain,
-        indexEvery = indexEvery, keepSnapshots = keepSnapshots, mor = mor,
-        morCompactChain = morCompactChain, replica = replica,
-        replicaWhere = replicaWhere, replicaCols = replicaCols,
-        matView = matView, matViewAggs = matViewAggs, source = source,
-        partBase = partBase, onBatch = onBatch,
-        format = format)
+      val q = tail(spark, changelogDir, lake, checkpointDir, schema,
+        nBuckets, saltBuckets, maxFilesPerTrigger, trigger, patchEnabled,
+        changeFeed, mor, source, partBase, onBatch, format, followers)
       try {
         q.awaitTermination()
         running = false // clean termination (drain done or caller stop)
@@ -220,6 +243,9 @@ object CdcStream {
           Thread.sleep(restartDelayMs)
       }
     }
+    // batched refresh: a drain may end mid index window — like
+    // CdcDriver.run, a completed run leaves every follower current
+    followers.catchUp(lake)
   }
 
   /** Enforce the one-lake-one-checkpoint pairing. The checkpoint side

@@ -53,18 +53,9 @@ object FooterProbe {
     * to CdcApply's probe scan). */
   def fromSegDirs(segDirs: Seq[String], keyCols: Set[String],
                   bucketKeys: Seq[String])
-      : Option[CdcApply.ProbeInfo] = {
-    val perPart = segDirs.flatMap { d =>
-      graft.lake.LakeIO.list(d)
-        .filter { case (name, _, isDir) => isDir && name.startsWith("p=") }
-        .flatMap { case (name, path, _) =>
-          val part = name.stripPrefix("p=").toInt
-          graft.lake.LakeIO.list(path)
-            .filter(_._1.endsWith(".parquet")).map(f => part -> f._2)
-        }
-    }
-    fromFiles(perPart, keyCols, bucketKeys)
-  }
+      : Option[CdcApply.ProbeInfo] =
+    fromFiles(segDirs.flatMap(graft.lake.LakeIO.partitionFiles(_, "p")),
+      keyCols, bucketKeys)
 
   /** Probe from concrete data-file paths (the streaming micro-batch's
     * `DataFrame.inputFiles`): source partition parsed from the `/p=P/` path

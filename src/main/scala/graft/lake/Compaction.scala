@@ -221,25 +221,7 @@ object Compaction {
        writer.option("maxRecordsPerFile", targetFileRows)
      else writer).parquet(dataDir)
 
-    val statsCol = ks.bucketCols.head
-    val statsIsString = cur.schema.fields.find(_.name == statsCol)
-      .exists(_.dataType == org.apache.spark.sql.types.StringType)
-    val newFiles = {
-      val work = LakeIO.list(dataDir)
-        .filter { case (name, _, isDir) => isDir && name.startsWith("b=") }
-        .flatMap { case (name, path, _) =>
-          val b = name.stripPrefix("b=").toInt
-          LakeIO.list(path).filter(_._1.endsWith(".parquet"))
-            .map(x => (b, x._2))
-        }
-      ParquetFooters.parMap(work) { case (b, p) =>
-        val st = ParquetFooters.writeStats(p,
-          if (statsIsString) Some(statsCol) else None)
-        DataFileMeta(p, b, st.rows, st.minKey, st.maxKey,
-          st.zoneCols, st.zoneMins, st.zoneMaxs, st.bytes,
-          st.liveRows, st.zoneNullFree, st.zoneFieldIds)
-      }
-    }
+    val newFiles = lake.writtenFiles(dataDir, ks.bucketCols.head, cur.schema)
 
     // rowsBefore counts only what this rewrite READ (the subset's rows on
     // an incremental run) so tombstonesDropped stays meaningful

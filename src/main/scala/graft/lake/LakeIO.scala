@@ -112,6 +112,18 @@ object LakeIO {
       }, st.isDirectory))
   }
 
+  /** (n, path) of every `.parquet` file in a `<key>=<n>` subdir of a
+    * partitioned write dir (`b` for lake buckets, `p` for changelog source
+    * partitions), in listing order. Spark's `_SUCCESS` and `.crc` files
+    * never match. */
+  def partitionFiles(dir: String, key: String): Seq[(Int, String)] =
+    list(dir).collect {
+      case (name, path, true) if name.startsWith(s"$key=") =>
+        name.stripPrefix(s"$key=").toInt -> path
+    }.flatMap { case (n, path) =>
+      list(path).filter(_._1.endsWith(".parquet")).map(f => n -> f._2)
+    }
+
   def readBytes(p: String): Array[Byte] = {
     val f = fs(p)
     val in = f.open(new Path(p))

@@ -6,59 +6,19 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-/** Driver-side parquet footer metadata reads: row counts + column min/max
-  * without touching data pages — the write/read-side metrics collection a
-  * real table format keeps in its manifests. O(files) small IOs; callers
-  * parallelize over files. */
+/** Driver-side parquet footer reads, without touching data pages (O(files)
+  * small IOs; callers fan out with [[parMap]]):
+  *  - [[writeStats]]: the per-file stats a commit records in its manifests
+  *    (row and live counts, key min/max, zone maps); reached through
+  *    [[LakeTable.writtenFiles]];
+  *  - [[probeStats]]: the changelog probe's lineage, row count, key-null
+  *    proof and embedded schema, one open per file;
+  *  - [[mightContain]] / [[mightContainAny]]: bloom or dictionary
+  *    membership for point-lookup pruning;
+  *  - [[nullCounts]]: per-column null totals. */
 object ParquetFooters {
 
   private val conf = new Configuration()
-
-  /** (rows, min, max) of a string column, from footer statistics. */
-  def stringStats(path: String, column: String): (Long, String, String) = {
-    withFooter(path) { footer =>
-      var rows = 0L; var mn: String = null; var mx: String = null
-      footer.getBlocks.forEach { block =>
-        rows += block.getRowCount
-        block.getColumns.forEach { c =>
-          if (c.getPath.toDotString == column && c.getStatistics != null &&
-              !c.getStatistics.isEmpty) {
-            val lo = c.getStatistics.minAsString()
-            val hi = c.getStatistics.maxAsString()
-            if (mn == null || lo < mn) mn = lo
-            if (mx == null || hi > mx) mx = hi
-          }
-        }
-      }
-      (rows, Option(mn).getOrElse(""), Option(mx).getOrElse(""))
-    }
-  }
-
-  /** (rows, Some((min, max))) of an int64 column from footer statistics —
-    * None when any populated block lacks statistics for the column, so
-    * callers fall back to a scan instead of recording corrupted bounds. */
-  def longStats(path: String, column: String): (Long, Option[(Long, Long)]) = {
-    withFooter(path) { footer =>
-      var rows = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-      var missing = false
-      footer.getBlocks.forEach { block =>
-        rows += block.getRowCount
-        var found = false
-        block.getColumns.forEach { c =>
-          if (c.getPath.toDotString == column && c.getStatistics != null &&
-              !c.getStatistics.isEmpty) {
-            found = true
-            val lo = c.getStatistics.genericGetMin.asInstanceOf[java.lang.Long]
-            val hi = c.getStatistics.genericGetMax.asInstanceOf[java.lang.Long]
-            if (lo < mn) mn = lo
-            if (hi > mx) mx = hi
-          }
-        }
-        if (!found && block.getRowCount > 0) missing = true
-      }
-      (rows, if (missing || mn > mx) None else Some((mn, mx)))
-    }
-  }
 
   /** Total null counts for `columns`, or None if any populated block lacks
     * statistics for one of them (callers must then assume nulls exist). */
@@ -82,15 +42,6 @@ object ParquetFooters {
       if (missing) None else Some(acc.toMap)
     }
   }
-
-  /** The Spark StructType JSON a Spark writer embeds in the footer's
-    * key-value metadata — the batch's exact schema without a distributed
-    * inference job. None for files not written by Spark. */
-  def sparkSchemaJson(path: String): Option[String] =
-    withFooter(path) { footer =>
-      Option(footer.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-    }
 
   /** Everything the changelog probe needs from one footer in ONE open:
     * (rows, _src_off bounds or None, key columns null-free, per-bucket-col

@@ -48,17 +48,6 @@ object Schemas {
   val changeEventSchemaV2: StructType =
     StructType(changeEventSchema.fields :+ evolutionField)
 
-  /** Tombstone marker column persisted on lake rows (deletes keep their lsn
-    * so out-of-order re-deliveries cannot resurrect keys; public reads
-    * filter it — LakeTable.read). */
-  val tombstoneField: StructField =
-    StructField("_tombstone", BooleanType, nullable = false)
-
-  /** Lake row schema for an event schema: business cols + engine meta cols
-    * (op replaced by the persisted tombstone flag). */
-  def lakeSchemaFor(eventSchema: StructType): StructType =
-    StructType(eventSchema.fields.filterNot(_.name == "op") :+ tombstoneField)
-
   val keyCols: Seq[String] = Seq("conv_id", "turn_idx")
 
   /** Table key contract: `bucketCols` (the hash-shard / conversation-level

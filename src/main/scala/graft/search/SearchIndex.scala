@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcApply
-import graft.lake.{ChangeFeedReader, DataFileMeta, LakeTable, ParquetFooters, Snapshot}
+import graft.lake.{ChangeFeedReader, LakeTable, Snapshot}
 import graft.model.Schemas
 
 /**
@@ -147,19 +147,7 @@ object SearchIndex {
       // MoR chains (LakeTable.lookupFilesKeyed probes them)
       .write.options(graft.lake.LakeIO.bloomWriteOptions("term"))
       .partitionBy("b").parquet(dataDir)
-    val files = graft.lake.LakeIO.list(dataDir)
-      .filter { case (name, _, isDir) => isDir && name.startsWith("b=") }
-      .flatMap { case (name, path, _) =>
-        val b = name.stripPrefix("b=").toInt
-        graft.lake.LakeIO.list(path)
-          .filter(_._1.endsWith(".parquet")).map(f => b -> f._2)
-      }
-    val metas = ParquetFooters.parMap(files) { case (b, p) =>
-      val st = ParquetFooters.writeStats(p, Some("term"))
-      DataFileMeta(p, b, st.rows, st.minKey, st.maxKey,
-        st.zoneCols, st.zoneMins, st.zoneMaxs, st.bytes,
-        st.liveRows, st.zoneNullFree, st.zoneFieldIds)
-    }
+    val metas = index.writtenFiles(dataDir, "term", deltas.schema)
     val newRefs = index.writeManifests(snapshotId, metas.groupBy(_.bucket))
     val carried = replaceBuckets match {
       case None => cur.map(_.manifests).getOrElse(Seq.empty)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.{LakeTable, Snapshot}
@@ -144,10 +144,4 @@ object GraftTable {
         else f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
           .remove(Schemas.FieldIdKey).build())
       })
-
-  /** The snapshot field (id-carrying, physical) for a public column name. */
-  def physicalField(s: Snapshot, name: String): StructField =
-    s.schema.fields.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(
-        s"column $name not in snapshot schema ${s.schema.simpleString}"))
 }

@@ -289,4 +289,23 @@ class CdcStreamSpec extends AnyFunSuite {
       lake.currentSnapshot.get.snapshotId)
     assert(postings(idx) == fromScratch(lake, "lag")._4)
   }
+
+  test("a drained run leaves the index current when the batch count is not" +
+      " a multiple of indexEvery") {
+    val dir = TestSpark.tmpDir("drain-cl")
+    // 11 segments of one file each: 11 one-file batches, indexEvery = 3
+    ChangelogGen.write(spark, dir, ChangelogGen.Config(
+      nEvents = 1100, nConvs = 20, turnsPerConv = 6, pUpdate = 0.3,
+      pDelete = 0.08, pDup = 0.1, segSize = 100, nSrcPartitions = 1,
+      filesPerSeg = 1))
+    val lake = new LakeTable(spark, TestSpark.tmpDir("drain-lake"))
+    val idx = new LakeTable(spark, TestSpark.tmpDir("drain-idx"))
+    CdcStream.run(spark, dir, lake, TestSpark.tmpDir("drain-ckpt"),
+      Schemas.changeEventSchema, nBuckets = 8, maxFilesPerTrigger = 1,
+      searchIndex = Some(idx), indexEvery = 3)
+    val head = lake.currentSnapshot.get
+    assert(head.epoch == 11, s"${head.epoch} batches applied")
+    assert(SearchIndex.indexedSourceSnapshot(idx) == head.snapshotId)
+    assert(postings(idx) == fromScratch(lake, "drain")._4)
+  }
 }

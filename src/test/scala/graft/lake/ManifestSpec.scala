@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.cdc.{CdcApply, CdcDriver}
 import graft.changelog.ChangelogGen
+import graft.search.SearchIndex
 
 /** Manifest-tree metadata scaling: a commit writes one manifest per TOUCHED
   * bucket and carries the parent's refs for the rest, so commit metadata
@@ -141,5 +142,64 @@ class ManifestSpec extends AnyFunSuite {
     assert(onDisk.size < before)
     // table still reads fine
     assert(lake.read().count() > 0)
+  }
+
+  /** The written-file layout contract every bucketed writer shares: each
+    * snapshot's new manifests list exactly the `.parquet` files under one
+    * `snap-<id>-*` data dir, each in its own `b=<bucket>` dir, and each
+    * entry carries that file's footer stats. Returns the new entries per
+    * snapshot id. */
+  private def assertLayout(t: LakeTable, statsCol: String)
+      : Map[Long, Seq[DataFileMeta]] = {
+    import scala.jdk.CollectionConverters._
+    def canon(p: String) = new java.io.File(p).getCanonicalPath
+    def entry(m: DataFileMeta) = (m.rows, m.minKey, m.maxKey,
+      m.zoneCols.toSeq, m.zoneMins.toSeq, m.zoneMaxs.toSeq, m.bytes,
+      m.liveRows, m.zoneNullFree.toSeq, m.zoneFieldIds.toSeq)
+    val snaps = t.snapshots
+    snaps.map { s =>
+      val parentRefs = snaps.find(_.snapshotId == s.parentId)
+        .map(_.manifests.toSet).getOrElse(Set.empty)
+      val metas = Manifests.loadAll(s.manifests.filterNot(parentRefs))
+      if (metas.nonEmpty) {
+        val dirs = metas.map(m =>
+          new java.io.File(canon(m.path)).getParentFile.getParentFile).distinct
+        assert(dirs.size == 1, s"snapshot ${s.snapshotId}: $dirs")
+        assert(dirs.head.getName.startsWith(s"snap-${s.snapshotId}-"))
+        val (parquet, other) = java.nio.file.Files.walk(dirs.head.toPath)
+          .iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(_.toFile).toSeq.partition(_.getName.endsWith(".parquet"))
+        assert(metas.map(m => canon(m.path)).sorted ==
+          parquet.map(_.getCanonicalPath).sorted,
+          s"snapshot ${s.snapshotId}: registered != written")
+        assert(other.nonEmpty && other.forall(f =>
+          f.getName == "_SUCCESS" || f.getName.endsWith(".crc")),
+          other.map(_.getName))
+        metas.foreach { m =>
+          assert(new java.io.File(m.path).getParentFile.getName ==
+            s"b=${m.bucket}")
+          val st = ParquetFooters.writeStats(m.path, Some(statsCol))
+          assert(entry(m) == entry(DataFileMeta(m.path, m.bucket, st.rows,
+            st.minKey, st.maxKey, st.zoneCols, st.zoneMins, st.zoneMaxs,
+            st.bytes, st.liveRows, st.zoneNullFree, st.zoneFieldIds)),
+            m.path)
+        }
+      }
+      s.snapshotId -> metas
+    }.toMap
+  }
+
+  test("merge, compaction and index refresh register exactly the parquet" +
+      " files they wrote, with their footer stats") {
+    val (lake, _) = build(2000, 4)
+    val merged = assertLayout(lake, "conv_id")
+    assert(merged.size >= 2 && merged.values.forall(_.nonEmpty))
+    val compacted = Compaction.compact(lake, targetFileRows = 20)
+    val split = assertLayout(lake, "conv_id")(compacted.snapshot.snapshotId)
+    assert(split.groupBy(_.bucket).values.exists(_.size > 1),
+      "targetFileRows split no bucket")
+    val index = new LakeTable(spark, TestSpark.tmpDir("man-idx"))
+    SearchIndex.refresh(spark, lake, index, nBuckets = 4)
+    assert(assertLayout(index, "term").values.flatten.nonEmpty)
   }
 }
