@@ -1181,10 +1181,10 @@ object Queries {
     val mid = ev.agg(max("_lsn")).head().getLong(0) / 2
     val st1 = graft.cdc.CdcApply.apply(lake, ev.filter(col("_lsn") <= mid),
       epoch = 1, nBuckets = 16)
-    graft.cdc.MatView.maintain(s, lake, view, st1.touchedSet, 1, aggs = cfg)
+    graft.cdc.MatView.maintain(s, lake, view, st1.touchedSet, aggs = cfg)
     val st2 = graft.cdc.CdcApply.apply(lake, ev.filter(col("_lsn") > mid),
       epoch = 2, nBuckets = 16)
-    graft.cdc.MatView.maintain(s, lake, view, st2.touchedSet, 2, aggs = cfg)
+    graft.cdc.MatView.maintain(s, lake, view, st2.touchedSet, aggs = cfg)
     view.read().select("conv_id", "n_turns", "max_turn", "last_lsn")
   }
 

@@ -190,7 +190,7 @@ object CdcApply {
         * fenced out by an admin operation. */
       maintenance: Boolean = false,
       /** the caller PROVABLY knows every bucket the batch touches (e.g.
-        * AggMaintenance/CrossMerge synthesize the batch from those very
+        * MatView/CrossMerge synthesize the batch from those very
         * buckets) — skips the bucket-probe scan. Extra buckets are
         * harmless; a missing one would lose rows, so only pass a hint you
         * can prove complete. */
@@ -434,7 +434,7 @@ object CdcApply {
     // conv_id scan is skipped; including an untouched bucket is harmless
     // (its rows are rewritten unchanged), excluding a touched one never
     // happens. Small batches do the exact column-pruned scan — unless the
-    // caller handed over a provably complete hint (AggMaintenance/CrossMerge
+    // caller handed over a provably complete hint (MatView/CrossMerge
     // synthesize the batch FROM those buckets). The hint is bucket-space
     // relative: trust it only if the table still has the bucket count the
     // caller computed it under (a concurrent rebucket invalidates it).

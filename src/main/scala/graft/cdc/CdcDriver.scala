@@ -28,8 +28,8 @@ final class CdcDriver(
     nBuckets: Int = 64,
     saltBuckets: Int = 0,
     quiet: Boolean = false,
-    /** optional derived conv_agg table, maintained after every batch
-      * (AggMaintenance) under the same epoch fencing */
+    /** optional derived conv_agg table: the [[MatView.convAgg]]
+      * materialized view, caught up after every batch like `matView` */
     aggLake: Option[LakeTable] = None,
     /** the feed contains op='P' partial-column patch events */
     patchEnabled: Boolean = false,

@@ -49,9 +49,9 @@ import graft.lake.LakeTable
  *                   rebases over disjoint concurrent ingest)
  *   CdcMain matview <lakeDir> <viewDir> [mvagg="n=count(*);s=sum(x)"] —
  *                   catch up (or backfill/create, with mvagg=) a
- *                   generalized materialized view: SQL aggregates grouped
- *                   by the bucket key, maintained at O(touched buckets);
- *                   also per-batch via replay flags mv=<dir> mvagg=…
+ *                   materialized view (a replay aggDir is one): SQL
+ *                   aggregates grouped by the bucket key, maintained at
+ *                   O(touched buckets); also per batch via mv= mvagg=
  *   CdcMain branch  <lakeDir> create|publish|discard <name> — writable
  *                   branch (full write-audit-publish): create shallow-forks
  *                   the table metadata (zero data copied; fork pinned on
@@ -133,11 +133,10 @@ import graft.lake.LakeTable
  *                   file bytes + stats + chains preserved, epoch/lineage
  *                   carried (the clone resumes the same feed), CHECK
  *                   constraints inherited; source expiry can't break it
- *   CdcMain rollback <lakeDir> <snapshotId|tagName> [agg=<aggDir>] — revert
- *                   the table to a prior snapshot as a NEW commit (epoch
- *                   rewinds so corrected batches can replay; snapshot-diff
- *                   followers self-heal); agg= rolls an epoch-cursored
- *                   derived table back in tandem
+ *   CdcMain rollback <lakeDir> <snapshotId|tagName> — revert the table to
+ *                   a prior snapshot as a NEW commit (epoch rewinds so
+ *                   corrected batches can replay; every derived table
+ *                   folds the revert at its next catch-up, e.g. `matview`)
  *
  * `replay` and `stream` accept `mor` (merge-on-read ingest: batches APPEND
  * per-bucket delta files instead of rewriting touched buckets — O(batch)
@@ -175,8 +174,8 @@ object CdcMain {
     rest.find(_.startsWith(name + "=")).map(_.drop(name.length + 1))
   private val flagNames =
     Seq("idx", "idxchain", "idxevery", "keep", "morchain", "rep", "rwhere", "rcols",
-      "cluster", "filerows", "imagecols", "buckets", "format", "agg",
-      "mv", "mvagg", "source", "partbase", "olderthan", "segsize", "convs",
+      "cluster", "filerows", "imagecols", "buckets", "format", "mv",
+      "mvagg", "source", "partbase", "olderthan", "segsize", "convs",
       "images", "startfrom", "nbuckets", "asof", "join")
   private val bareWords =
     Set("patch", "nocf", "mor", "control", "noidx", "zorder")
@@ -192,6 +191,26 @@ object CdcMain {
       require(i > 0, s"mvagg entry '$p' is not name=aggExpr")
       MatView.AggCol(p.take(i).trim, p.drop(i + 1).trim)
     }).getOrElse(Nil)
+
+  /** Live row count + order-independent checksum (`state`, `endure`). Map
+    * columns are not hashable (order-ambiguous), so they hash as
+    * sorted-entry JSON. Columns hash in NAME order, so two logically-equal
+    * tables whose physical column order differs (e.g. a mid-stream additive
+    * column lands at the end on the parquet path but mid-schema via a
+    * JSON-envelope replay's sidecar) produce the same checksum. */
+  private def checksum(lake: LakeTable): (Long, String) = {
+    val t = lake.read()
+    val hashCols = t.schema.fields.toIndexedSeq.sortBy(_.name).map { f =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.MapType =>
+          to_json(sort_array(map_entries(col(f.name))))
+        case _ => col(f.name)
+      }
+    }
+    val row = t.select(count(lit(1)).as("n"),
+      sum(xxhash64(hashCols: _*).cast("decimal(38,0)")).as("ck")).head()
+    (row.getLong(0), String.valueOf(row.getDecimal(1)))
+  }
 
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -458,8 +477,6 @@ object CdcMain {
       val lake = new LakeTable(spark, lakeDir)
       val view = new LakeTable(spark, viewDir)
       val aggs = parseAggs(flag(rest, "mvagg"))
-      // refreshed by SNAPSHOT id: an epoch-neutral fold (DML on main)
-      // advances the view snapshot while keeping its epoch
       val before = view.currentSnapshot.map(_.snapshotId).getOrElse(-1L)
       MatView.catchUp(spark, lake, view,
         if (aggs.nonEmpty) Some(MatView.Config(aggs)) else None)
@@ -747,27 +764,16 @@ object CdcMain {
         s""""epoch":${snap.epoch}}""")
       spark.stop()
 
-    case "rollback" :: lakeDir :: target :: rest =>
+    case "rollback" :: lakeDir :: target :: Nil =>
       val spark = session()
       val lake = new LakeTable(spark, lakeDir)
       val targetId = target.toLongOption.getOrElse(
         lake.tags.getOrElse(target, throw new NoSuchElementException(
           s"no tag $target in $lakeDir")))
       val snap = lake.rollbackTo(targetId)
-      // coupled rollback of an epoch-cursored derived table: without it the
-      // agg sits AHEAD of the rewound main epoch and stops catching up
-      val aggOut = flag(rest, "agg").map { aggDir =>
-        val agg = new LakeTable(spark, aggDir)
-        agg.rollbackEpochs(snap.epoch) match {
-          case Some(aid) if agg.currentSnapshot.exists(_.epoch > snap.epoch) =>
-            val as = agg.rollbackTo(aid)
-            s""","agg":{"snapshotId":${as.snapshotId},"epoch":${as.epoch}}"""
-          case _ => s""","agg":{"unchanged":true}"""
-        }
-      }.getOrElse("")
       println(s"""{"rolledBackTo":$targetId,""" +
         s""""snapshotId":${snap.snapshotId},"epoch":${snap.epoch},""" +
-        s""""rows":${lake.read().count()}$aggOut}""")
+        s""""rows":${lake.read().count()}}""")
       spark.stop()
 
     case "dml" :: lakeDir :: statement :: Nil =>
@@ -918,21 +924,8 @@ object CdcMain {
           replicaCols = Seq("role", "text", "ts"),
           matView = Some(new LakeTable(spark, s"$workDir/mv")),
           matViewAggs = parseAggs(Some("n=count(1);maxlsn=max(_lsn)")))
-      def checksum(l: LakeTable): (Long, String) = l.currentSnapshot match {
-        case None => (0L, "0")
-        case Some(_) =>
-          val t = l.read()
-          val hashCols = t.schema.fields.toIndexedSeq.sortBy(_.name).map { f =>
-            f.dataType match {
-              case _: org.apache.spark.sql.types.MapType =>
-                to_json(sort_array(map_entries(col(f.name))))
-              case _ => col(f.name)
-            }
-          }
-          val row = t.select(count(lit(1)).as("n"),
-            sum(xxhash64(hashCols: _*).cast("decimal(38,0)")).as("ck")).head()
-          (row.getLong(0), String.valueOf(row.getDecimal(1)))
-      }
+      def stateOf(l: LakeTable): (Long, String) =
+        if (l.currentSnapshot.isEmpty) (0L, "0") else checksum(l)
       val t00 = System.nanoTime()
       // resume at the chunk containing the applied cursor (epoch = applied
       // segment bound; deterministic gen makes regeneration idempotent)
@@ -985,8 +978,8 @@ object CdcMain {
         if (lo < totalEv) { spark.stop(); spark = session() }
       }
       val totalSec = (System.nanoTime() - t00) / 1e9
-      val (rowsP, ckP) = checksum(lake)
-      val (rowsC, ckC) = if (withControl) checksum(ctl) else (0L, "")
+      val (rowsP, ckP) = stateOf(lake)
+      val (rowsC, ckC) = if (withControl) stateOf(ctl) else (0L, "")
       println(f"""{"endured":$totalEv,"appliedRows":$applied,""" +
         f""""totalSec":$totalSec%.1f,""" +
         f""""eventsPerSec":${if (totalSec > 0) applied / totalSec else 0.0}%.1f,""" +
@@ -1004,24 +997,7 @@ object CdcMain {
       lake.currentSnapshot match {
         case None => println("""{"rows":0,"checksum":0,"snapshot":null}""")
         case Some(snap) =>
-          val t = lake.read()
-          // map columns are not hashable (order-ambiguous) — canonicalize
-          // them as sorted-entry JSON before the row hash. Columns hash in
-          // NAME order, so two logically-equal tables whose physical column
-          // order differs (e.g. a mid-stream additive column lands at the
-          // end on the parquet path but mid-schema via a JSON-envelope
-          // replay's sidecar) produce the same checksum.
-          val hashCols = t.schema.fields.toIndexedSeq.sortBy(_.name).map { f =>
-            f.dataType match {
-              case _: org.apache.spark.sql.types.MapType =>
-                to_json(sort_array(map_entries(col(f.name))))
-              case _ => col(f.name)
-            }
-          }
-          val row = t.select(
-            count(lit(1)).as("n"),
-            sum(xxhash64(hashCols: _*)
-              .cast("decimal(38,0)")).as("ck")).head()
+          val (rows, ck) = checksum(lake)
           val morInfo =
             if (!snap.mor) ""
             else {
@@ -1033,7 +1009,7 @@ object CdcMain {
             if (snap.sourceEpochsOrEmpty.isEmpty) ""
             else s""""sourceEpochs":{${snap.sourceEpochsOrEmpty.toSeq.sorted
               .map { case (k, v) => s""""$k":$v""" }.mkString(",")}},"""
-          println(s"""{"rows":${row.getLong(0)},"checksum":${row.getDecimal(1)},""" +
+          println(s"""{"rows":$rows,"checksum":$ck,""" +
             // audited metadata count (-1 = unknown): must equal "rows"
             // whenever >= 0 — the scanned count is the ground truth this
             // cross-checks against

@@ -45,6 +45,8 @@ object CdcStream {
       nBuckets: Int = 64,
       saltBuckets: Int = 0,
       maxFilesPerTrigger: Int = 16,
+      /** optional derived conv_agg table: the [[MatView.convAgg]]
+        * materialized view, caught up per micro-batch like `matView` */
       aggLake: Option[LakeTable] = None,
       trigger: Trigger = Trigger.AvailableNow(),
       patchEnabled: Boolean = false,

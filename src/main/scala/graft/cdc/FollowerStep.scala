@@ -7,22 +7,23 @@ import graft.search.SearchIndex
 
 /**
  * Derived-state upkeep after each commit, shared by the batch driver and the
- * streaming tailer: the aggregate table, the materialized view, the search
+ * streaming tailer: the materialized views (conv_agg is one), the search
  * index and the replica follow the lake, the MoR fold policy runs, and
  * retention expires what no follower still needs.
  *
  * Every follower is catch-up by construction (fenced no-op when current), so
  * one `catchUp` heals a crash that landed between a main commit and its
  * upkeep, backfills a follower attached after the fact, and stands in for
- * per-batch upkeep on a skipped (fenced) batch.
+ * per-batch upkeep on a skipped (fenced) batch. Every follower keeps the same
+ * cursor, the lake snapshot id it last folded plus 2 as its epoch, so
+ * rollbacks, DML and migrations on the lake are ordinary forward changes.
  *
  * Retention reads the followers' cursors instead of guessing a floor: the
  * index and the replica diff from the source snapshot they last folded, so
  * the lake keeps every snapshot from the lower of the two up to its head
- * (snapshot ids are dense). The aggregate table and the view recompute
- * touched buckets and fall back to a superset when history is gone
- * (Derived.missedBucketsWhere), so they set no floor. Each derived table
- * keeps `keepSnapshots` of its own history.
+ * (snapshot ids are dense). A view recomputes the buckets changed since its
+ * cursor and falls back to a superset when history is gone, so views set no
+ * floor. Each derived table keeps `keepSnapshots` of its own history.
  */
 private[cdc] final class FollowerStep(
     spark: SparkSession,
@@ -38,14 +39,14 @@ private[cdc] final class FollowerStep(
     keepSnapshots: Int,
     morCompactChain: Int) {
 
-  private val matViewCfg =
-    if (matViewAggs.nonEmpty) Some(MatView.Config(matViewAggs)) else None
+  private val views: Seq[(LakeTable, Option[MatView.Config])] =
+    aggLake.map(_ -> Some(MatView.convAgg)).toSeq ++ matView.map(_ ->
+      (if (matViewAggs.nonEmpty) Some(MatView.Config(matViewAggs)) else None))
   private var appliedBatches = 0L
 
   /** Bring every follower up to the lake's current snapshot. */
   def catchUp(lake: LakeTable): Unit = {
-    aggLake.foreach(AggMaintenance.catchUp(spark, lake, _))
-    matView.foreach(MatView.catchUp(spark, lake, _, matViewCfg))
+    views.foreach { case (v, cfg) => MatView.catchUp(spark, lake, v, cfg) }
     searchIndex.foreach(refreshIndex(lake, _))
     replica.foreach(refreshReplica(lake, _))
   }
@@ -58,14 +59,9 @@ private[cdc] final class FollowerStep(
       // work (the fold is a maintenance commit at the same epoch)
       if (lake.currentSnapshot.exists(_.mor))
         CdcApply.maybeFold(lake, morCompactChain)
-      // derived tables key on the COMMITTED global epoch (distinct from the
-      // per-source epoch when several feeds interleave)
-      if (stats.touchedSet.nonEmpty) {
-        aggLake.foreach(AggMaintenance.maintain(spark, lake, _,
-          stats.touchedSet, stats.snapshot.epoch))
-        matView.foreach(MatView.maintain(spark, lake, _, stats.touchedSet,
-          stats.snapshot.epoch, aggs = matViewCfg))
-      }
+      // a view diffs from its own cursor, so one refresh folds the batch
+      // and any fold or concurrent commit since
+      views.foreach { case (v, cfg) => MatView.catchUp(spark, lake, v, cfg) }
       // batched refresh: the index refresh is a net snapshot diff, so
       // refreshing every indexEvery batches amortizes the posting fan-out
       appliedBatches += 1
@@ -96,6 +92,6 @@ private[cdc] final class FollowerStep(
         else lake.currentSnapshot
           .fold(0)(h => (h.snapshotId - cursors.min + 1).toInt)
       lake.expireSnapshots(math.max(keepSnapshots, needed))
-      (aggLake ++ matView ++ replica).foreach(_.expireSnapshots(keepSnapshots))
+      (views.map(_._1) ++ replica).foreach(_.expireSnapshots(keepSnapshots))
     }
 }

@@ -13,8 +13,6 @@ package graft.cdc
  */
 object FooterProbe {
 
-  private val partRe = raw"/p=(\d+)/".r
-
   /** Additive union of the distinct footer schemas (fields in order of first
     * appearance, all nullable — a file missing a later-added column reads it
     * as null). None on a same-name type conflict or unparseable JSON: the
@@ -58,16 +56,14 @@ object FooterProbe {
       keyCols, bucketKeys)
 
   /** Probe from concrete data-file paths (the streaming micro-batch's
-    * `DataFrame.inputFiles`): source partition parsed from the `/p=P/` path
-    * component. Returns None if any file lacks it. */
+    * `DataFrame.inputFiles`): source partition read from each file's own
+    * `p=P` parent dir, as [[fromSegDirs]] reads it. Returns None if any
+    * file lacks it. */
   def fromInputFiles(paths: Seq[String], keyCols: Set[String],
                      bucketKeys: Seq[String])
       : Option[CdcApply.ProbeInfo] = {
-    val perPart = paths.map { p =>
-      partRe.findFirstMatchIn(p) match {
-        case Some(m) => m.group(1).toInt -> p
-        case None => return None // flat layout: fall back to the probe scan
-      }
+    val perPart = paths.map { p => // flat layout: fall back to the probe scan
+      graft.lake.LakeIO.partitionOf(p, "p").getOrElse(return None) -> p
     }
     fromFiles(perPart, keyCols, bucketKeys)
   }

@@ -8,11 +8,12 @@ import graft.lake.{ChangeFeedReader, LakeIO, LakeTable}
 /**
  * Row-level filtered/projected REPLICA table, maintained incrementally from
  * the main lake's change feed — the third derived-table shape next to the
- * aggregate table (AggMaintenance) and the inverted search index
- * (SearchIndex). The reference mirrors entity subsets from the same stream
- * that feeds the primary store: user-cache-updater-2.0 projects user rows
- * into Redis hashes (UserMetadataUpdater.scala:58-84), and the ES sinks keep
- * a projected document subset searchable (ElasticSearchUtil.scala:49-156).
+ * materialized views (MatView, conv_agg among them) and the inverted search
+ * index (SearchIndex). The reference mirrors entity subsets from the same
+ * stream that feeds the primary store: user-cache-updater-2.0 projects user
+ * rows into Redis hashes (UserMetadataUpdater.scala:58-84), and the ES sinks
+ * keep a projected document subset searchable
+ * (ElasticSearchUtil.scala:49-156).
  * Here the mirror is a second LakeTable with the SAME key contract as the
  * source, holding `SELECT keyCols, cols FROM source WHERE predicate`.
  *

@@ -117,12 +117,19 @@ object LakeIO {
     * partitions), in listing order. Spark's `_SUCCESS` and `.crc` files
     * never match. */
   def partitionFiles(dir: String, key: String): Seq[(Int, String)] =
-    list(dir).collect {
-      case (name, path, true) if name.startsWith(s"$key=") =>
-        name.stripPrefix(s"$key=").toInt -> path
-    }.flatMap { case (n, path) =>
-      list(path).filter(_._1.endsWith(".parquet")).map(f => n -> f._2)
-    }
+    list(dir).collect { case (_, path, true) => path }
+      .flatMap(list(_).collect {
+        case (name, f, false) if name.endsWith(".parquet") => f })
+      .flatMap(f => partitionOf(f, key).map(_ -> f))
+
+  /** `n` when the directory directly holding `file` is named `<key>=<n>`:
+    * only the file's own parent counts, never a `<key>=` dir further up
+    * the path (a table root may itself sit under one). */
+  def partitionOf(file: String, key: String): Option[Int] = {
+    val dir = new Path(file).getParent.getName
+    if (dir.startsWith(s"$key=")) dir.drop(key.length + 1).toIntOption
+    else None
+  }
 
   def readBytes(p: String): Array[Byte] = {
     val f = fs(p)

@@ -243,7 +243,12 @@ final class LakeTable(val spark: SparkSession, val root: String) {
   }
 
   /** All snapshots, oldest first (time travel / lineage audit). */
-  def snapshots: Seq[Snapshot] = versionIds.sorted.map(loadSnapshot)
+  def snapshots: Seq[Snapshot] = snapshotsFrom(Long.MinValue)
+
+  /** The retained snapshots with id >= `id`, oldest first — a follower's
+    * diff range loads only the snapshots after its cursor. */
+  def snapshotsFrom(id: Long): Seq[Snapshot] =
+    versionIds.filter(_ >= id).sorted.map(loadSnapshot)
 
   /** Latest snapshot committed at or before `tsMillis` (SQL `TIMESTAMP AS
     * OF`). Commit time is the version file's mtime, set once at the atomic
@@ -686,13 +691,13 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * EPOCH REWIND is deliberate: the fence returns to the target's epoch, so
     * corrected source batches can re-apply at the undone epochs (the CDC
     * use: roll back, fix the feed, replay from the target's changelog
-    * position). Two consumers need care, both documented:
-    *  - epoch-cursored derived tables (AggMaintenance) sit AHEAD of a
-    *    rewound main table; roll them back in tandem ([[rollbackEpochs]]
-    *    finds the right target) — the CLI `rollback agg=` flag does both.
-    *  - a live streaming tailer's checkpoint does NOT rewind: rolled-back
-    *    batches are not re-delivered on resume (stop the stream first; use
-    *    rollback on streamed lakes to undo admin/DML state, not feed data).
+    * position). Derived tables (materialized views, conv_agg, the search
+    * index, replicas) cursor on snapshot ids, never on the epoch, so they
+    * fold the rollback at their next catch-up and need no rollback of
+    * their own. One consumer needs care: a live streaming tailer's
+    * checkpoint does NOT rewind, so rolled-back batches are not re-delivered
+    * on resume (stop the stream first; use rollback on streamed lakes to
+    * undo admin/DML state, not feed data).
     *
     * Concurrency: the exclusive version-file publish is the arbiter, same
     * as every commit; a lost race retries against the new head (the target
@@ -728,13 +733,6 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** The newest snapshot whose epoch is <= `epoch` — the coupled-rollback
-    * target for an epoch-cursored derived table whose main table was rolled
-    * back (AggMaintenance fences on epoch, so a derived table left AHEAD of
-    * a rewound main would silently stop catching up). */
-  def rollbackEpochs(epoch: Long): Option[Long] =
-    snapshots.reverse.find(_.epoch <= epoch).map(_.snapshotId)
 
   // ------------------------------------------------------------------ tags
 

@@ -123,11 +123,11 @@ object SimilarityOps {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Standard IVF sizing: nlist ≈ sqrt(N), clamped to [8, 65536] — cell
+  /** Standard IVF sizing: nlist ≈ sqrt(N), clamped to [8, 2^16] — cell
     * count must grow with the corpus or per-cell candidate lists become
     * the same O(N) scan IVF exists to avoid. */
   def cellsFor(corpusSize: Long): Int =
-    math.min(65536, math.max(8, math.ceil(math.sqrt(
+    math.min(1 << 16, math.max(8, math.ceil(math.sqrt(
       math.max(corpusSize, 1L).toDouble)).toInt))
 
   /** IVF (inverted-file) ANN: k-means-lite coarse quantizer. Centroids are

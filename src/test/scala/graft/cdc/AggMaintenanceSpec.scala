@@ -7,14 +7,31 @@ import graft.TestSpark
 import graft.changelog.ChangelogGen
 import graft.lake.LakeTable
 
-/** The derived conv_agg table stays consistent with the main table after an
-  * incremental multi-batch replay — equal to recomputing the aggregates from
-  * scratch over final state (the reference's activity-agg invariant). */
+/** The derived conv_agg table (the MatView.convAgg view) stays consistent
+  * with the main table after an incremental multi-batch replay — equal to
+  * recomputing the aggregates from scratch over final state (the
+  * reference's activity-agg invariant). */
 class AggMaintenanceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def aggOf(lake: LakeTable): Map[String, (Int, Int, Int, Long, Map[String, Int])] =
-    lake.read()
+  private type AggRow = (Int, Int, Int, Long, Map[String, Int])
+
+  /** The conv_agg table's rows by conversation. */
+  private def aggRows(agg: LakeTable): Map[String, AggRow] =
+    agg.read().collect().map { r =>
+      r.getAs[String]("conv_id") -> ((r.getAs[Int]("n_turns"),
+        r.getAs[Int]("n_tool_turns"), r.getAs[Int]("max_turn_idx"),
+        r.getAs[Long]("last_lsn"), scala.jdk.CollectionConverters
+          .MapHasAsScala(r.getJavaMap[String, Int](r.fieldIndex("role_counts")))
+          .asScala.toMap))
+    }.toMap
+
+  /** conv_agg recomputed from scratch over the main table's live rows. */
+  private def recompute(main: LakeTable): Map[String, AggRow] = {
+    val roles = main.read().groupBy("conv_id", "role").count().collect()
+      .groupBy(_.getString(0))
+      .map { case (c, rs) => c -> rs.map(r => r.getString(1) -> r.getLong(2).toInt).toMap }
+    main.read()
       .groupBy("conv_id")
       .agg(count(lit(1)).cast("int").as("n_turns"),
         count(when(col("role") === "tool", 1)).cast("int").as("n_tool_turns"),
@@ -22,7 +39,17 @@ class AggMaintenanceSpec extends AnyFunSuite {
         max("_lsn").as("last_lsn"))
       .collect()
       .map(r => r.getString(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getLong(4), Map.empty[String, Int]))).toMap
+        r.getLong(4), roles(r.getString(0))))).toMap
+  }
+
+  /** One upsert event for `conv`, at an lsn above anything generated. */
+  private def oneTurn(conv: String) = spark.range(1).select(
+    lit("U").as("op"), lit(conv).as("conv_id"), lit(0).as("turn_idx"),
+    lit("user").as("role"), lit("prune probe").as("text"),
+    lit(null).cast("string").as("tool"),
+    lit("2024-01-01 00:00:00").cast("timestamp").as("ts"),
+    lit(10000000L).as("_lsn"), lit(0).as("_src_part"),
+    lit(10000000L).as("_src_off"))
 
   test("incrementally maintained conv_agg equals recompute-from-scratch") {
     val dir = TestSpark.tmpDir("agg-cl")
@@ -89,7 +116,28 @@ class AggMaintenanceSpec extends AnyFunSuite {
     val want = main.read().groupBy("conv_id").count().collect()
       .map(r => (r.getString(0), r.getLong(1).toInt)).toMap
     assert(got == want)
-    assert(agg.currentSnapshot.get.epoch == main.currentSnapshot.get.epoch)
+    assert(MatView.syncedMainSnapshot(agg) == main.currentSnapshot.get.snapshotId)
+  }
+
+  test("conv_agg folds a main-table rollback at the next catch-up") {
+    val dir = TestSpark.tmpDir("agg-rb-cl")
+    ChangelogGen.write(spark, dir, ChangelogGen.Config(
+      nEvents = 2000, nConvs = 20, turnsPerConv = 4,
+      pUpdate = 0.3, pDelete = 0.2, pDup = 0.05, segSize = 500))
+    val main = new LakeTable(spark, TestSpark.tmpDir("agg-rb-main"))
+    val agg = new LakeTable(spark, TestSpark.tmpDir("agg-rb-agg"))
+    def driver() = new CdcDriver(spark, dir, main, segmentsPerBatch = 1,
+      nBuckets = 8, quiet = true, aggLake = Some(agg))
+    driver().run(maxBatches = 2)
+    val mark = main.currentSnapshot.get.snapshotId
+    driver().run()
+    main.rollbackTo(mark)
+    driver().run(maxBatches = 0) // the driver's start-up catch-up only
+    assert(aggRows(agg) == recompute(main))
+    assert(MatView.syncedMainSnapshot(agg) == main.currentSnapshot.get.snapshotId)
+    // the rewound feed replays at the undone epochs and the agg follows
+    assert(driver().run().count(!_.skipped) == 2)
+    assert(aggRows(agg) == recompute(main))
   }
 
   /** The touchedHint contract: a maintenance batch synthesized FROM known
@@ -103,9 +151,12 @@ class AggMaintenanceSpec extends AnyFunSuite {
       pUpdate = 0.3, pDelete = 0.1, segSize = 1000))
     val main = new LakeTable(spark, TestSpark.tmpDir("agg-jobs-main"))
     val agg = new LakeTable(spark, TestSpark.tmpDir("agg-jobs-agg"))
-    val statsAll = new CdcDriver(spark, dir, main, segmentsPerBatch = 2,
+    new CdcDriver(spark, dir, main, segmentsPerBatch = 2,
       nBuckets = 8, quiet = true, aggLake = Some(agg)).run()
-    val touched = statsAll.last.touchedSet
+    // a current view is a no-op: give it one fresh main commit to fold
+    val conv = main.read().select("conv_id").head().getString(0)
+    val touched = CdcApply.apply(main, oneTurn(conv),
+      main.currentSnapshot.get.epoch + 1, nBuckets = 8).touchedSet
     assert(touched.nonEmpty)
 
     val execs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -119,9 +170,8 @@ class AggMaintenanceSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      // epoch-neutral refresh of an already-populated aligned agg table
-      AggMaintenance.maintain(spark, main, agg, touched,
-        main.currentSnapshot.get.epoch, maintenance = true)
+      // refresh of an already-populated aligned agg table
+      MatView.maintain(spark, main, agg, touched)
       // listener delivery is async: wait for the write's execution event
       val deadline = System.nanoTime() + 10e9.toLong
       while (System.nanoTime() < deadline && execs.get() < 1) Thread.sleep(50)
@@ -153,17 +203,10 @@ class AggMaintenanceSpec extends AnyFunSuite {
       .filter(col("conv_id") === conv)
       .select(CdcApply.bucketOf(col("conv_id"), mainNB)).head().getInt(0)
     val epoch = main.currentSnapshot.get.epoch + 1
-    val batch = spark.range(1).select(
-      lit("U").as("op"), lit(conv).as("conv_id"), lit(0).as("turn_idx"),
-      lit("user").as("role"), lit("prune probe").as("text"),
-      lit(null).cast("string").as("tool"),
-      lit("2024-01-01 00:00:00").cast("timestamp").as("ts"),
-      lit(10000000L).as("_lsn"), lit(0).as("_src_part"),
-      lit(10000000L).as("_src_off"))
     val aggBefore = agg.currentSnapshot.get
-    val stats = CdcApply.apply(main, batch, epoch, nBuckets = mainNB)
+    val stats = CdcApply.apply(main, oneTurn(conv), epoch, nBuckets = mainNB)
     assert(stats.touchedSet == Set(touchedBucket))
-    AggMaintenance.maintain(spark, main, agg, stats.touchedSet, epoch)
+    MatView.maintain(spark, main, agg, stats.touchedSet)
 
     // files-written set of the maintenance commit is confined to the
     // touched bucket; every other bucket's files carried by path identity

@@ -308,4 +308,26 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(SearchIndex.indexedSourceSnapshot(idx) == head.snapshotId)
     assert(postings(idx) == fromScratch(lake, "drain")._4)
   }
+
+  test("driver and tailer read a file's source partition from its own p=" +
+      " dir when the changelog root sits under another p= dir") {
+    val dir = s"${TestSpark.tmpDir("proot")}/p=7/changelog"
+    ChangelogGen.write(spark, dir, ChangelogGen.Config(
+      nEvents = 1000, nConvs = 20, turnsPerConv = 6, pUpdate = 0.3,
+      pDelete = 0.08, nSrcPartitions = 4, segSize = 500))
+    val driven = new LakeTable(spark, TestSpark.tmpDir("proot-driver"))
+    new CdcDriver(spark, dir, driven, segmentsPerBatch = 1, nBuckets = 8,
+      quiet = true).run()
+    val tailed = new LakeTable(spark, TestSpark.tmpDir("proot-tailer"))
+    CdcStream.run(spark, dir, tailed, TestSpark.tmpDir("proot-ckpt"),
+      Schemas.changeEventSchema, nBuckets = 8)
+    val lineage = driven.currentSnapshot.get.lineage
+    assert(lineage.map(_.srcPart) == (0 until 4))
+    assert(tailed.currentSnapshot.get.lineage == lineage)
+    // the tailer's footer probe over the same files, as Spark lists them
+    val files = spark.read.option("recursiveFileLookup", "true")
+      .parquet(dir).inputFiles.toSeq
+    assert(FooterProbe.fromInputFiles(files, Set("conv_id", "turn_idx",
+      "_lsn"), Seq("conv_id")).map(_.lineage).contains(lineage))
+  }
 }

@@ -88,20 +88,20 @@ class MatViewSpec extends AnyFunSuite {
       quiet = true, matView = Some(view), matViewAggs = aggs).run()
     val other = Seq(MatView.AggCol("n_turns", "count(distinct role)"))
     val e = intercept[IllegalArgumentException] {
-      MatView.maintain(spark, main, view, Set(0), 99,
+      MatView.maintain(spark, main, view, Set(0),
         aggs = Some(MatView.Config(other)))
     }
     assert(e.getMessage.contains("contract"))
     // typo fails eagerly at declaration of a NEW view
     val fresh = new LakeTable(spark, TestSpark.tmpDir("mv-c-fresh"))
     intercept[Exception] {
-      MatView.maintain(spark, main, fresh, Set(0), 99, aggs = Some(
+      MatView.maintain(spark, main, fresh, Set(0), aggs = Some(
         MatView.Config(Seq(MatView.AggCol("x", "count((")))))
     }
     // a new view without a declared contract is refused
     val fresh2 = new LakeTable(spark, TestSpark.tmpDir("mv-c-fresh2"))
     intercept[IllegalArgumentException] {
-      MatView.maintain(spark, main, fresh2, Set(0), 99)
+      MatView.maintain(spark, main, fresh2, Set(0))
     }
   }
 
@@ -120,7 +120,25 @@ class MatViewSpec extends AnyFunSuite {
     assert(viewRows(view) != oracle(main)) // view is now stale
     MatView.catchUp(spark, main, view)
     assert(viewRows(view) == oracle(main)) // snapshot cursor saw the DML
-    assert(view.currentSnapshot.get.epoch == epochBefore) // epoch-neutral
+    assert(MatView.syncedMainSnapshot(view) ==
+      main.currentSnapshot.get.snapshotId)
+  }
+
+  test("a main-table rollback folds at the next catch-up") {
+    val dir = changelog("rollback")
+    val main = new LakeTable(spark, TestSpark.tmpDir("mv-rb-main"))
+    val view = new LakeTable(spark, TestSpark.tmpDir("mv-rb-view"))
+    def driver() = new CdcDriver(spark, dir, main, segmentsPerBatch = 1,
+      nBuckets = 8, quiet = true, matView = Some(view), matViewAggs = aggs)
+    driver().run(maxBatches = 2)
+    val mark = main.currentSnapshot.get.snapshotId
+    driver().run()
+    main.rollbackTo(mark)
+    assert(viewRows(view) != oracle(main)) // the view is now ahead
+    MatView.catchUp(spark, main, view)
+    assert(viewRows(view) == oracle(main))
+    assert(MatView.syncedMainSnapshot(view) ==
+      main.currentSnapshot.get.snapshotId)
   }
 
   test("view survives a main-table rebucket (layout divergence fallback)") {

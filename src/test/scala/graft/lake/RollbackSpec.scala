@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.cdc.{AggMaintenance, CdcApply}
+import graft.cdc.{CdcApply, MatView}
 import graft.search.SearchIndex
 
 /** Snapshot rollback (the bad-batch undo) and retention-proof tags:
   * epoch rewind lets corrected batches replay at the undone epochs,
-  * snapshot-diff followers (search index) self-heal, epoch-cursored
-  * derived tables roll back in tandem via rollbackEpochs, and tagged
-  * snapshots survive any expire policy. */
+  * snapshot-diff followers (search index, derived aggregates) self-heal
+  * with no rollback of their own, and tagged snapshots survive any expire
+  * policy. */
 class RollbackSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
@@ -119,35 +119,40 @@ class RollbackSpec extends AnyFunSuite {
       .count() == 12 * 3)
   }
 
-  test("epoch-cursored derived table rolls back in tandem and catches up") {
+  test("derived aggregate follows a rollback through its snapshot cursor") {
     val lake = new LakeTable(spark, TestSpark.tmpDir("rb-agg-lake"))
     val agg = new LakeTable(spark, TestSpark.tmpDir("rb-agg-agg"))
-    val st1 = CdcApply.apply(lake, batch(w1), epoch = 1, nBuckets = 8)
-    AggMaintenance.maintain(spark, lake, agg, st1.touchedSet, 1)
+    def catchUp(view: LakeTable): Unit =
+      MatView.catchUp(spark, lake, view, Some(MatView.convAgg))
+    def rows(view: LakeTable): Set[String] = view.read()
+      .select("conv_id", "n_turns", "max_turn_idx", "last_lsn", "role_counts")
+      .collect().map(_.toString).toSet
+    def freshBuild(name: String): Set[String] = {
+      val fresh = new LakeTable(spark, TestSpark.tmpDir(name))
+      catchUp(fresh)
+      rows(fresh)
+    }
+    CdcApply.apply(lake, batch(w1), epoch = 1, nBuckets = 8)
+    catchUp(agg)
     val good = lake.currentSnapshot.get
 
-    val st2 = CdcApply.apply(lake, batch(bad), epoch = 2, nBuckets = 8)
-    AggMaintenance.maintain(spark, lake, agg, st2.touchedSet, 2)
-    assert(agg.currentSnapshot.get.epoch == 2)
+    CdcApply.apply(lake, batch(bad), epoch = 2, nBuckets = 8)
+    catchUp(agg)
+    val badRows = rows(agg)
 
-    // main rolls back; the agg is now AHEAD (epoch 2 > 1) — roll it back too
+    // main rolls back (epoch rewinds to 1); the agg is not rolled back:
+    // its next catch-up folds the revert as one more forward change
     lake.rollbackTo(good.snapshotId)
-    val aggTarget = agg.rollbackEpochs(1).get
-    agg.rollbackTo(aggTarget)
-    assert(agg.currentSnapshot.get.epoch == 1)
+    catchUp(agg)
+    assert(rows(agg) == freshBuild("rb-agg-fresh1"))
+    assert(rows(agg) != badRows)
 
-    // corrected batch + catch-up must converge to a fresh recompute
+    // the corrected batch re-applies at the undone epoch and is folded too
     val st3 = CdcApply.apply(lake, batch(fixed), epoch = 2, nBuckets = 8)
-    AggMaintenance.catchUp(spark, lake, agg)
-    val fresh = new LakeTable(spark, TestSpark.tmpDir("rb-agg-fresh"))
-    AggMaintenance.maintain(spark, lake, fresh,
-      (0 until 8).toSet, 2)
-    val a = agg.read().select("conv_id", "n_turns", "last_lsn")
-      .collect().map(_.toString).toSet
-    val f = fresh.read().select("conv_id", "n_turns", "last_lsn")
-      .collect().map(_.toString).toSet
-    assert(a == f, s"agg after coupled rollback + catchUp must equal a fresh build")
-    assert(st3.snapshot.epoch == 2)
+    assert(!st3.skipped)
+    catchUp(agg)
+    assert(rows(agg) == freshBuild("rb-agg-fresh2"),
+      "agg after rollback + catch-up must equal a fresh build")
   }
 
   test("rollback refuses a missing/expired target and loses races loudly") {
