@@ -671,8 +671,8 @@ object OracleSql {
          |  ON pre.conv_id = post.conv_id AND pre.turn_idx = post.turn_idx
          |WHERE pre.lsn IS NULL OR post.lsn IS NULL OR pre.lsn <> post.lsn""".stripMargin,
 
-    // q55: the engine answers through the SQL-pushdown surface
-    // (graft.sql.GraftSql zone/bucket file pruning); the oracle is the
+    // q55: the engine answers through the SQL surface (GraftSql.table over
+    // the DSv2 scan's zone/bucket file pruning); the oracle is the
     // same LWW election + WHERE in plain SQL — pruning must be invisible.
     "q55_sql_pushdown" ->
       s"""WITH mid AS (SELECT CAST(FLOOR(max(event_id) / 2.0) AS BIGINT) AS m FROM events),

@@ -985,9 +985,10 @@ object Queries {
   /** SQL surface with transparent pushdown: the events LWW feed ingests
     * into a lake, then a PURE SQL query over `GraftSql.table`'s temp view
     * (WHERE on the `_lsn` zone column + a residual type predicate) must
-    * equal the plain-SQL election with the same WHERE — the pruning rule
-    * (graft.sql.GraftPushdown) is semantically invisible by construction,
-    * and this row pins that through the driver's oracle. */
+    * equal the plain-SQL election with the same WHERE — the DSv2 scan's
+    * plan-time file pruning (graft.sources.GraftScan) is semantically
+    * invisible by construction, and this row pins that through the
+    * driver's oracle. */
   def q55SqlPushdown(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events").select(
       when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),

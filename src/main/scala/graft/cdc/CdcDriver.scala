@@ -155,7 +155,7 @@ final class CdcDriver(
       val probe =
         if (format == "json") None // no footers; merge runs its probe scan
         else CdcApply.phase("driver-footer-probe") {
-          feed.probe(FooterProbe.fromSegDirs(paths, _, _))
+          feed.probe(paths)
         }
       // The footer probe already read every file's footer — its embedded
       // Spark schema JSONs give the batch's (additively merged) schema for

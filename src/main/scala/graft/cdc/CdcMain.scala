@@ -107,7 +107,8 @@ import graft.lake.LakeTable
  *                   registers other lakes for cross-lake joins; metadata
  *                   views lake_files/lake_snapshots/lake_lineage/
  *                   lake_tags/lake_branches are registered alongside;
- *                   prints rows + filesScanned/filesTotal
+ *                   prints rows + filesScanned/filesTotal (files of
+ *                   every registered lake)
  *   CdcMain dml     <lakeDir> <statement> — DELETE FROM t WHERE … |
  *                   UPDATE t SET c = expr, … WHERE … through the same
  *                   epoch-fenced maintenance merge (graft.sql.GraftDml);
@@ -653,8 +654,8 @@ object CdcMain {
             throw new NoSuchElementException(
               s"asof=$v is neither a tag nor a snapshot id") })
       }.getOrElse(-1L)
-      graft.sql.GraftSql.table(spark, lakeDir, asOf)
-        .createOrReplaceTempView("lake")
+      val main = graft.sql.GraftSql.table(spark, lakeDir, asOf)
+      main.createOrReplaceTempView("lake")
       // metadata tables: lake_files / lake_snapshots / lake_lineage /
       // lake_tags / lake_branches (Iceberg metadata-table analogue)
       graft.sql.GraftSql.metadataTables(spark, lakeDir).foreach {
@@ -662,26 +663,23 @@ object CdcMain {
       }
       // join=name:dir,name2:dir2 — register other lakes (same pushdown)
       // for cross-lake joins in the same query
-      flag(rest, "join").foreach(_.split(",").filter(_.nonEmpty).foreach { p =>
-        val i = p.indexOf(':')
-        require(i > 0, s"join entry '$p' is not name:dir")
-        graft.sql.GraftSql.table(spark, p.drop(i + 1))
-          .createOrReplaceTempView(p.take(i))
-      })
+      val joined = flag(rest, "join").toSeq
+        .flatMap(_.split(",").filter(_.nonEmpty)).map { p =>
+          val i = p.indexOf(':')
+          require(i > 0, s"join entry '$p' is not name:dir")
+          val t = graft.sql.GraftSql.table(spark, p.drop(i + 1))
+          t.createOrReplaceTempView(p.take(i))
+          t
+        }
       val df = spark.sql(query)
       val rows = df.count()
-      // file-level pruning observability: the parquet scans the optimizer
-      // actually planned vs the snapshot's total (same counters as `range`)
-      val scanned = df.queryExecution.sparkPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.inputFiles.length
-      }.sum
-      val lk = new LakeTable(spark, lakeDir)
-      val total = (if (asOf < 0) lk.currentSnapshot
-                   else lk.snapshots.find(_.snapshotId == asOf))
-        .map(_.totalFiles).getOrElse(0)
+      // file-level pruning observability: files the planned graft scans
+      // read vs the files of every registered lake's pinned snapshot
+      val (scanned, total) =
+        graft.sql.GraftSql.fileCounts(df, main +: joined)
+      val snapId = graft.sql.GraftSql.snapshotOf(main).get.snapshotId
       println(s"""{"rows":$rows,"filesScanned":$scanned,"filesTotal":$total,""" +
-        s""""snapshotId":${if (asOf < 0) lk.currentSnapshot.map(_.snapshotId).getOrElse(-1L) else asOf}}""")
+        s""""snapshotId":$snapId}""")
       spark.stop()
 
     case "history" :: lakeDir :: rest =>

@@ -96,9 +96,9 @@ object CdcStream {
       /** test-only fault hook, invoked per micro-batch BEFORE the merge —
         * lets specs inject a transient failure to exercise supervision */
       onBatch: Long => Unit = _ => (),
-      /** changelog segment format: "parquet" (footer fast paths) or
-        * "json" (Debezium-style envelopes via JsonChangelog — `schema` is
-        * ignored; the sidecar types the rows; no footer probe). */
+      /** changelog segment format: "parquet" or "json" (Debezium-style
+        * envelopes via JsonChangelog — `schema` is ignored; the sidecar
+        * types the rows). */
       format: String = "parquet"): StreamingQuery =
     tail(spark, changelogDir, lake, checkpointDir, schema, nBuckets,
       saltBuckets, maxFilesPerTrigger, trigger, patchEnabled, changeFeed, mor,
@@ -156,18 +156,12 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         onBatch(batchId)
-        // Footer-derived lineage/row count/null-proof from the micro-batch's
-        // own input files: with it the merge is the batch's ONLY data pass
-        // (validation rides the merge's observe; no lineage probe scan) —
-        // without it a live tailer pays a standing ~2x read amplification.
-        val probe =
-          if (format == "json") None // text shards carry no footers
-          else feed.probe(
-            FooterProbe.fromInputFiles(batch.inputFiles.toSeq, _, _))
+        // No footer probe: the micro-batch arrives as an RDD-backed plan
+        // with no input files, so the tailer pays CdcApply's lineage probe
+        // scan (the batch driver probes its segment footers instead).
         val stats = CdcApply.apply(lake, feed.shift(batch), epoch = batchId + 1,
-          nBuckets, saltBuckets, probeInfo = probe,
-          patchEnabled = patchEnabled, changeFeed = changeFeed, mor = mor,
-          source = source)
+          nBuckets, saltBuckets, patchEnabled = patchEnabled,
+          changeFeed = changeFeed, mor = mor, source = source)
         followers.afterCommit(lake, stats)
       }
       .start()

@@ -1,11 +1,11 @@
 package graft.cdc
 
 /**
- * Footer-derived batch metadata shared by the batch driver and the streaming
- * tailer: per-source-partition lineage + row count + key-null-freedom proof
- * for a set of changelog parquet files, computed from parquet FOOTERS on the
- * driver (O(files) metadata IO, no cluster scan — the reference reads the
- * same lineage token off each Kafka record, JobRequestSerde.scala:22-35).
+ * Footer-derived batch metadata for the batch driver: per-source-partition
+ * lineage + row count + key-null-freedom proof for a set of changelog
+ * parquet files, computed from parquet FOOTERS on the driver (O(files)
+ * metadata IO, no cluster scan — the reference reads the same lineage
+ * token off each Kafka record, JobRequestSerde.scala:22-35).
  *
  * With this in hand, CdcApply needs exactly ONE data pass per batch: the
  * validation count rides the merge via `observe`, the lineage probe and the
@@ -44,28 +44,6 @@ object FooterProbe {
       })
       Some(StructType(out.values.toSeq))
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Probe from `seg=N/p=P/` segment directories (batch driver layout).
-    * Returns None when the layout lacks `p=` dirs (flat segments fall back
-    * to CdcApply's probe scan). */
-  def fromSegDirs(segDirs: Seq[String], keyCols: Set[String],
-                  bucketKeys: Seq[String])
-      : Option[CdcApply.ProbeInfo] =
-    fromFiles(segDirs.flatMap(graft.lake.LakeIO.partitionFiles(_, "p")),
-      keyCols, bucketKeys)
-
-  /** Probe from concrete data-file paths (the streaming micro-batch's
-    * `DataFrame.inputFiles`): source partition read from each file's own
-    * `p=P` parent dir, as [[fromSegDirs]] reads it. Returns None if any
-    * file lacks it. */
-  def fromInputFiles(paths: Seq[String], keyCols: Set[String],
-                     bucketKeys: Seq[String])
-      : Option[CdcApply.ProbeInfo] = {
-    val perPart = paths.map { p => // flat layout: fall back to the probe scan
-      graft.lake.LakeIO.partitionOf(p, "p").getOrElse(return None) -> p
-    }
-    fromFiles(perPart, keyCols, bucketKeys)
   }
 
   /** Core: (srcPartition, filePath) pairs -> ProbeInfo, or None when any
@@ -109,23 +87,25 @@ object FooterProbe {
   }
 }
 
-/** One feed's footer probe against one lake, shared by the batch driver and
-  * the tailer. The null-free proof covers the LAKE'S OWN key columns:
-  * probing the transcript names against a generic-key table would "prove"
-  * the wrong columns null-free and let a null real key skip validation (a
-  * fresh lake seeds as transcripts, which is also what both loops' merge
-  * seeds; the spec is fixed once that first commit lands). Multi-feed
-  * ingest namespaces the feed's partition ids by `partBase`, in the data
-  * and in the probe's lineage alike. */
+/** One feed against one lake: the batch driver's footer probe, and the
+  * `_src_part` namespacing both loops apply. The null-free proof covers
+  * the LAKE'S OWN key columns: probing the transcript names against a
+  * generic-key table would "prove" the wrong columns null-free and let a
+  * null real key skip validation (a fresh lake seeds as transcripts, which
+  * is also what both loops' merge seeds; the spec is fixed once that first
+  * commit lands). Multi-feed ingest namespaces the feed's partition ids by
+  * `partBase`, in the data and in the probe's lineage alike. */
 private[cdc] final class FeedProbe(lake: graft.lake.LakeTable, partBase: Int) {
 
-  /** Probe a batch's files: `probeFiles` is [[FooterProbe.fromSegDirs]] or
-    * [[FooterProbe.fromInputFiles]] applied to them. */
-  def probe(probeFiles: (Set[String], Seq[String]) => Option[CdcApply.ProbeInfo])
-      : Option[CdcApply.ProbeInfo] = {
+  /** Probe a batch's `seg=N/p=P/` segment directories. None when the
+    * layout lacks `p=` dirs (flat segments fall back to CdcApply's probe
+    * scan). */
+  def probe(segDirs: Seq[String]): Option[CdcApply.ProbeInfo] = {
     val ks = lake.currentSnapshot.map(_.keySpec)
       .getOrElse(graft.model.Schemas.KeySpec.transcripts)
-    val p = probeFiles(ks.keyCols.toSet + "_lsn", ks.bucketCols)
+    val p = FooterProbe.fromFiles(
+      segDirs.flatMap(graft.lake.LakeIO.partitionFiles(_, "p")),
+      ks.keyCols.toSet + "_lsn", ks.bucketCols)
     if (partBase == 0) p
     else p.map(p => p.copy(lineage = p.lineage.map(l =>
       l.copy(srcPart = l.srcPart + partBase))))

@@ -1056,8 +1056,9 @@ object LakeTable {
   /** Drop candidate files whose bloom filter / full dictionary PROVES the
     * value absent (ParquetFooters.mightContain); inconclusive evidence
     * keeps the file. O(candidates) parallel driver footer IOs. Shared by
-    * the point-lookup path and GraftSql's key-equality pushdown so probe
-    * semantics can never diverge between them. */
+    * the point-lookup path and the SQL scan's key-equality pruning
+    * (graft.sources.GraftScan) so probe semantics can never diverge
+    * between them. */
   def filterByMembership(files: Seq[DataFileMeta], column: String,
                          value: Any): Seq[DataFileMeta] =
     ParquetFooters.parMap(files)(f =>

@@ -23,19 +23,20 @@ import graft.lake.{DataFileMeta, LakeTable, ParquetFooters, Snapshot}
 
 /** Scan planning for [[GraftTable]].
   *
-  * File pruning happens at PLAN time from lake metadata — the same three
-  * ladders as the engine's own SQL pushdown (`graft.sql.GraftPushdown`),
-  * re-expressed over the V2 `Filter` API:
-  *   1. zone maps: range/equality conjuncts on integral/timestamp/date
-  *      columns intersect per-file [min, max] (whole delta CHAINS on
-  *      merge-on-read — pruning single chain files could elect a stale
-  *      winner);
+  * File pruning happens at PLAN time from lake metadata, over the V2
+  * `Filter` API — the one planner behind both the catalog
+  * (`graft.`…``) and `graft.sql.GraftSql.table`, in three ladders:
+  *   1. zone maps: range/equality conjuncts on integral, timestamp
+  *      (LTZ and NTZ) and date columns intersect per-file [min, max]
+  *      (whole delta CHAINS on merge-on-read — pruning single chain files
+  *      could elect a stale winner);
   *   2. bucket-key equality: equality on ALL bucket columns prunes to one
   *      bucket, then per-file key ranges and bloom/dictionary membership;
   *   3. string equality on any other column: bloom/dictionary chunk
   *      evidence per file (CoW) / chain (MoR).
-  * Every filter is ALSO returned as residual, so pruning can only drop
-  * whole files the predicate provably cannot match — never rows.
+  * Every filter the kept files do not provably satisfy on every row is
+  * ALSO returned as residual, so pruning can only drop whole files the
+  * predicate provably cannot match — never rows.
   *
   * Partitions are per BUCKET (each carries its chain's files), implement
   * [[HasPartitionKey]], and the scan reports [[KeyGroupedPartitioning]]
@@ -274,7 +275,7 @@ final class GraftScan(lake: LakeTable, snapshot: Snapshot,
     * snapshot stores it (skipped when every kept file is provably clean).
     * Read schema keeps the snapshot's field ids so rename/drop evolution
     * resolves by id against old files. */
-  private lazy val readStruct: StructType = {
+  private[graft] lazy val readStruct: StructType = {
     val names = required.fields.map(_.name).toSeq
     val extra =
       (if (snapshot.mor) ks.keyCols :+ "_lsn" else Seq.empty) ++
@@ -501,6 +502,11 @@ object GraftScan {
       Some(t.getTime * 1000L + (t.getNanos % 1000000) / 1000L)
     case i: java.time.Instant =>
       Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    // TIMESTAMP_NTZ: micros in the column's own (local) domain, the domain
+    // its INT64 parquet stats are in
+    case t: java.time.LocalDateTime =>
+      Some(t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
+        t.getNano / 1000L)
     case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
     case d: java.time.LocalDate => Some(d.toEpochDay)
     case _ => None
@@ -509,7 +515,7 @@ object GraftScan {
   private[sources] def zoneEligible(snapshot: Snapshot, name: String): Boolean =
     snapshot.schema.fields.exists(f => f.name == name && (f.dataType match {
       case IntegerType | LongType | ShortType | ByteType |
-           TimestampType | DateType => true
+           TimestampType | TimestampNTZType | DateType => true
       case _ => false
     }))
 

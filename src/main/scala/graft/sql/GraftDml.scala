@@ -18,9 +18,9 @@ import graft.model.Schemas
  * lms-jobs/merge-user-courses/.../MergeOperations.scala:49-99) — restated
  * here as declarative predicates instead of per-key client calls.
  *
- * Scale shape: the matched-row read goes through [[GraftSql.table]], so the
- * WHERE clause file-prunes (zone maps, bucket + key-range, bloom) before any
- * data IO; the write rewrites only the matched rows' buckets (copy-on-write)
+ * Scale shape: the matched-row read goes through [[GraftSql.table]] — the
+ * catalog's DSv2 scan — so the WHERE clause file-prunes (zone maps, bucket
+ * + key-range, bloom) at plan time, before any data IO; the write rewrites only the matched rows' buckets (copy-on-write)
  * or appends per-bucket deltas (merge-on-read). A predicate touching 0.1% of
  * a 100 TB table reads and writes ~0.1% of it.
  *

@@ -1,75 +1,42 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper}
-import org.apache.spark.sql.catalyst.optimizer.{ColumnPruning, PushDownPredicates}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, Statistics}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions.{col, not}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2Relation}
+import org.apache.spark.sql.types.Metadata
 
-import graft.lake.{Branch, DataFileMeta, LakeTable, Snapshot}
+import graft.lake.{Branch, LakeTable, Snapshot}
+import graft.sources.{GraftCatalog, GraftInputPartition, GraftTable}
 
 /**
- * SQL/DataFrame surface over a graft lake with TRANSPARENT pushdown: a
- * custom Catalyst leaf relation plus an optimizer rule that rewrites
- * `Filter(cond, GraftLakeRelation)` into a parquet scan over only the
- * files the filter can touch — zone-map range pruning (ts/_lsn/integral
- * columns) intersected with bucket + key-range pruning (key-column
- * equality) — with the ORIGINAL predicate kept as a residual, so the
- * result always equals a full-scan filter exactly.
- *
- * This is the engine's answer to "let analysts query the table": instead
- * of a bespoke reader API, `GraftSql.table(spark, dir)` returns a plain
- * DataFrame (register it as a temp view and it is plain SQL), and the
- * pruning the CLI `range`/`lookup` paths do explicitly happens implicitly
- * for any WHERE clause. The reference's equivalent read surface is direct
- * Cassandra partition-key reads (jobs-core CassandraUtil.scala:29-77) —
- * restated here as predicate-to-file pruning so it composes with the whole
- * relational algebra rather than a point-get API.
- *
- * Spark-first architecture notes:
- *  - the rewrite substitutes a NATIVE parquet LogicalRelation, so Spark's
- *    vectorized columnar reader, whole-stage codegen, and row-group-level
- *    predicate pushdown all apply to the surviving files (file-level
- *    pruning here, page/row-group pruning in the reader);
- *  - after substitution the rule re-runs `PushDownPredicates` and
- *    `ColumnPruning` on the plan (the user-rule batch runs after the main
- *    optimizer batches, so those would otherwise not see the new subtree)
- *    — a SELECT of two columns reads two columns, a WHERE reaches the
- *    parquet reader as both a file pruner and a data filter;
- *  - merge-on-read snapshots insert the LWW-resolve plan between scan and
- *    filter; predicates stay ABOVE the election (pushing them below could
- *    elect a stale version), while zone pruning drops whole delta chains
- *    that cannot produce an in-range winner — same granularity contract as
- *    [[graft.lake.LakeTable.pruneByRanges]].
+ * SQL/DataFrame surface over a graft lake. `GraftSql.table(spark, dir)`
+ * returns a plain DataFrame (register it as a temp view and it is plain
+ * SQL) planned by the catalog's own DSv2 scan ([[graft.sources.GraftTable]]
+ * / [[graft.sources.GraftScan]]) without any session catalog config: WHERE
+ * clauses file-prune (zone maps, bucket + key range, bloom/dictionary
+ * membership), claimed conjuncts unlock metadata COUNT/MIN/MAX, equally
+ * sharded lakes join without a shuffle, and merge-on-read chains resolve
+ * inside the reader. The pruning the CLI `range`/`lookup` paths do
+ * explicitly happens implicitly for any WHERE clause. The reference's
+ * equivalent read surface is direct Cassandra partition-key reads
+ * (jobs-core CassandraUtil.scala:29-77) — restated here as
+ * predicate-to-file pruning so it composes with the whole relational
+ * algebra rather than a point-get API.
  *
  * Snapshot isolation: the relation pins the snapshot current at
  * `table()` time; concurrent commits don't shift results mid-query.
  * Re-create the DataFrame (or view) to see newer data.
  */
-final case class GraftLakeRelation(
-    root: String,
-    snapshot: Snapshot,
-    output: Seq[Attribute])(
-    @transient val session: SparkSession) extends LeafNode {
-  override def computeStats(): Statistics = Statistics(
-    sizeInBytes = BigInt(snapshot.totalRows.max(1L)) *
-      math.max(snapshot.schema.defaultSize, 1))
-  override def otherCopyArgs: Seq[AnyRef] = session :: Nil
-  override def simpleString(maxFields: Int): String =
-    s"GraftLakeRelation $root, snapshot=${snapshot.snapshotId}" +
-      s"${if (snapshot.mor) ", mor" else ""}"
-}
-
 object GraftSql {
 
   /** The lake's live rows as a DataFrame whose WHERE clauses file-prune.
     * `asOf >= 0` time-travels to that snapshot (it must not be expired).
-    * Internal `_tombstone` is hidden (as in [[LakeTable.read]]); `_lsn`
-    * stays visible — it is the change-cursor column consumers filter on. */
+    * Internal `_tombstone` is hidden (as in [[LakeTable.read]]); `_lsn`,
+    * `_src_part` and `_src_off` stay visible as ordinary columns (the V2
+    * table exposes them as metadata columns), in snapshot schema order. */
   def table(spark: SparkSession, root: String, asOf: Long = -1L): DataFrame = {
-    enable(spark)
     val lake = new LakeTable(spark, root)
     val s =
       if (asOf < 0) lake.currentSnapshot.getOrElse(
@@ -77,11 +44,37 @@ object GraftSql {
       else lake.snapshots.find(_.snapshotId == asOf).getOrElse(
         throw new NoSuchElementException(
           s"no snapshot $asOf in $root (expired or never committed)"))
-    val pub = s.schema.fields.filterNot(_.name == "_tombstone")
-    val out = pub.toSeq.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-    org.apache.spark.sql.graft.GraftBridge.ofRows(
-      spark, GraftLakeRelation(root, s, out)(spark))
+    // the catalog doubles as the FunctionCatalog that resolves the table's
+    // `bucket` transform — storage-partitioned joins need it
+    val rel = DataSourceV2Relation.create(new GraftTable(lake, s),
+      Some(new GraftCatalog), Some(Identifier.of(Array.empty, root)))
+      .withMetadataColumns()
+    // empty metadata: the engine columns' attributes carry Spark's
+    // metadata-column marker, which must not leak into the public schema
+    val out = s.schema.fields.toSeq.filterNot(_.name == "_tombstone").map { f =>
+      Alias(rel.output.find(_.name == f.name).get, f.name)(
+        explicitMetadata = Some(Metadata.empty))
+    }
+    org.apache.spark.sql.graft.GraftBridge.ofRows(spark, Project(out, rel))
+  }
+
+  /** The snapshot a [[table]] frame pinned. */
+  def snapshotOf(lakeFrame: DataFrame): Option[Snapshot] =
+    lakeFrame.queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation => r.table
+    }.collect { case t: GraftTable => t.snapshot }
+
+  /** File accounting for a query over [[table]] frames: (files its graft
+    * scans were planned over — every [[GraftInputPartition]]'s files after
+    * plan-time pruning — and the files of the snapshots `lakes` pinned).
+    * A metadata-answered aggregate plans no scan and reads 0 files. */
+  def fileCounts(query: DataFrame, lakes: Seq[DataFrame]): (Int, Int) = {
+    val scanned = query.queryExecution.sparkPlan.collect {
+      case b: BatchScanExec => b.inputPartitions.collect {
+        case p: GraftInputPartition => p.files.length
+      }.sum
+    }.sum
+    (scanned, lakes.flatMap(snapshotOf).map(_.totalFiles).sum)
   }
 
   /** Metadata TABLES (Iceberg `table.files` / `.snapshots` / `.history`
@@ -115,180 +108,5 @@ object GraftSql {
       .toDF("name", "base_snapshot_id", "base_epoch")
     Map("files" -> files, "snapshots" -> snaps, "lineage" -> lineage,
       "tags" -> tags, "branches" -> branches)
-  }
-
-  /** Idempotently install [[GraftPushdown]] on a live session. `table`
-    * calls this itself; exposed for sessions that receive pre-built plans. */
-  def enable(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(GraftPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftPushdown
-}
-
-/** `spark.sql.extensions=graft.sql.GraftSqlExtensions` entry point, for
-  * spark-submit deployments where the session is built by the launcher —
-  * injected into the main optimizer batch (earlier than the runtime
-  * `extraOptimizations` path, so the standard batches see the rewrite). */
-class GraftSqlExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectOptimizerRule(_ => GraftPushdown)
-}
-
-object GraftPushdown extends Rule[LogicalPlan] with PredicateHelper {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    var changed = false
-    val rewritten = plan.transformDown {
-      case f @ Filter(cond, rel: GraftLakeRelation) =>
-        changed = true
-        f.copy(child = rewrite(rel, splitConjunctivePredicates(cond)))
-      case rel: GraftLakeRelation =>
-        changed = true
-        rewrite(rel, Nil)
-    }
-    if (!changed) plan
-    // the user-rule batch runs AFTER the main optimizer batches, so re-run
-    // the two rules whose work the new subtree needs: predicate pushdown
-    // (the residual Filter walks down to the parquet relation, where
-    // FileSourceStrategy turns it into row-group filters) and column
-    // pruning (a narrow SELECT reads a narrow parquet schema)
-    else ColumnPruning(PushDownPredicates(rewritten))
-  }
-
-  /** Value domains match the zone-map stats domains (micros / days / raw). */
-  private def statsLong(l: Literal): Option[Long] = (l.value, l.dataType) match {
-    case (null, _) => None
-    case (v: Byte, _) => Some(v.toLong)
-    case (v: Short, _) => Some(v.toLong)
-    case (v: Int, DateType) => Some(v.toLong) // days, as in INT32 stats
-    case (v: Int, _) => Some(v.toLong)
-    case (v: Long, TimestampType) => Some(v) // micros, as in INT64 stats
-    case (v: Long, _) => Some(v)
-    case _ => None
-  }
-
-  /** (column, lo, hi) bounds implied by one conjunct, conservative (a
-    * strict bound keeps its endpoint — pruning may keep extra files, never
-    * drop needed ones). Only columns of the relation with integral/ts/date
-    * type participate; everything else is residual-only. */
-  private def bound(rel: GraftLakeRelation, e: Expression)
-      : Option[(String, Long, Long)] = {
-    def ok(a: Attribute): Boolean =
-      rel.outputSet.contains(a) && (a.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | TimestampType |
-             TimestampNTZType | DateType => true
-        case _ => false
-      })
-    e match {
-      case EqualTo(a: AttributeReference, l: Literal) if ok(a) =>
-        statsLong(l).map(v => (a.name, v, v))
-      case EqualTo(l: Literal, a: AttributeReference) if ok(a) =>
-        statsLong(l).map(v => (a.name, v, v))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) if ok(a) =>
-        statsLong(l).map(v => (a.name, v, Long.MaxValue))
-      case GreaterThan(a: AttributeReference, l: Literal) if ok(a) =>
-        statsLong(l).map(v => (a.name, v, Long.MaxValue))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) if ok(a) =>
-        statsLong(l).map(v => (a.name, Long.MinValue, v))
-      case LessThan(a: AttributeReference, l: Literal) if ok(a) =>
-        statsLong(l).map(v => (a.name, Long.MinValue, v))
-      // literal-first comparisons, mirrored
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) if ok(a) =>
-        statsLong(l).map(v => (a.name, Long.MinValue, v))
-      case GreaterThan(l: Literal, a: AttributeReference) if ok(a) =>
-        statsLong(l).map(v => (a.name, Long.MinValue, v))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) if ok(a) =>
-        statsLong(l).map(v => (a.name, v, Long.MaxValue))
-      case LessThan(l: Literal, a: AttributeReference) if ok(a) =>
-        statsLong(l).map(v => (a.name, v, Long.MaxValue))
-      case _ => None
-    }
-  }
-
-  /** All bucket columns equal to literals → the point-lookup prune. */
-  private def keyEquality(rel: GraftLakeRelation, conjuncts: Seq[Expression])
-      : Option[Seq[Any]] = {
-    val ks = rel.snapshot.keySpec
-    def valueOf(c: String): Option[Any] = conjuncts.collectFirst {
-      case EqualTo(a: AttributeReference, Literal(v, _))
-        if a.name == c && v != null => v
-      case EqualTo(Literal(v, _), a: AttributeReference)
-        if a.name == c && v != null => v
-    }.map {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case other => other
-    }
-    val vals = ks.bucketCols.map(valueOf)
-    if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
-  }
-
-  private def rewrite(rel: GraftLakeRelation,
-                      conjuncts: Seq[Expression]): LogicalPlan = {
-    val spark = rel.session
-    val s = rel.snapshot
-    // intersect per-column bounds so `a >= x AND a <= y` becomes one range
-    val byCol = conjuncts.flatMap(bound(rel, _))
-      .groupBy(_._1).map { case (c, bs) =>
-        (c, bs.map(_._2).max, bs.map(_._3).min)
-      }.toSeq
-    val zoneKept: Seq[DataFileMeta] =
-      if (byCol.isEmpty) s.files else LakeTable.pruneByRanges(s, byCol)._1
-    val keyVals = keyEquality(rel, conjuncts)
-    val keyKept: Seq[DataFileMeta] = keyVals match {
-      case Some(vs) =>
-        val keyFiles = LakeTable.pruneByKey(s, vs).map(_.path).toSet
-        val ranged = zoneKept.filter(f => keyFiles.contains(f.path))
-        // per-file membership evidence (parquet bloom / chunk dictionary):
-        // planning-time O(candidates) footer IO, same code path as the
-        // point lookup (LakeTable.filterByMembership)
-        LakeTable.filterByMembership(ranged, s.keySpec.bucketCols.head, vs.head)
-      case None => zoneKept
-    }
-    // string-equality conjuncts on NON-key columns (`role = 'tool'`): zone
-    // maps only cover integral/ts columns, so these previously opened every
-    // file — lift the same bloom/dictionary chunk probe into planning.
-    // Granularity is storage-mode safe (file on CoW, whole chain on MoR:
-    // LakeTable.pruneByMembership); inconclusive evidence keeps the file,
-    // and the residual Filter above guarantees exactness either way.
-    val probedAlready: Set[String] =
-      if (keyVals.isDefined) Set(s.keySpec.bucketCols.head) else Set.empty
-    val strEqs: Seq[(String, String)] = conjuncts.flatMap {
-      case EqualTo(a: AttributeReference, Literal(v, StringType))
-        if v != null && rel.outputSet.contains(a) => Some((a.name, v.toString))
-      case EqualTo(Literal(v, StringType), a: AttributeReference)
-        if v != null && rel.outputSet.contains(a) => Some((a.name, v.toString))
-      case _ => None
-    }
-    val kept = strEqs.distinct.filterNot(e => probedAlready.contains(e._1))
-      .foldLeft(keyKept) { case (fs, (c, v)) =>
-        LakeTable.pruneByMembership(s, fs, c, v)
-      }
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-      else spark.read.schema(s.schema).parquet(kept.map(_.path): _*)
-    val resolved =
-      if (s.mor && base.columns.contains("_lsn"))
-        graft.plans.LwwResolve.resolve(base, s.keySpec, s.nBuckets,
-          spark.sessionState.conf.numShufflePartitions)
-      else base
-    val pub =
-      if (resolved.columns.contains("_tombstone"))
-        resolved.filter(not(col("_tombstone"))).drop("_tombstone")
-      else resolved
-    val analyzed = pub.queryExecution.analyzed
-    // rebind the relation's attribute ids onto the substituted plan so the
-    // residual Filter (and everything above) keeps resolving
-    val aliases: Seq[NamedExpression] = rel.output.map { o =>
-      val n = analyzed.output.find(_.name == o.name).getOrElse(
-        throw new IllegalStateException(
-          s"rewrite lost column ${o.name} of $rel"))
-      // pin the relation's (metadata-free) attribute metadata: the parquet
-      // attrs underneath carry table-internal field ids that must not leak
-      // into the query's public output schema
-      Alias(n, o.name)(exprId = o.exprId, explicitMetadata = Some(o.metadata))
-    }
-    Project(aliases, analyzed)
   }
 }

@@ -1,19 +1,21 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.cdc.CdcApply
 import graft.lake.LakeTable
+import graft.sources.{GraftInputPartition, GraftScan}
 
 /** The SQL surface must be (a) semantically invisible — any query through
   * `GraftSql.table` equals the same query over `lake.read()` — and (b)
   * physically pruned: WHERE clauses on zone-mapped columns / the bucket key
-  * reach the parquet scan as a SMALLER FILE LIST, and narrow SELECTs reach
-  * it as a narrow read schema. Both halves asserted here, CoW and MoR. */
+  * reach the graft DSv2 scan as a SMALLER FILE LIST, and narrow SELECTs
+  * reach it as a narrow read schema. Both halves asserted here, CoW and
+  * MoR. */
 class GraftSqlSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
@@ -49,11 +51,11 @@ class GraftSqlSpec extends AnyFunSuite {
     lake
   }
 
-  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
-    df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-
+  /** Files the executed graft scan reads: every file of every
+    * [[GraftInputPartition]] (one per surviving bucket). */
   private def filesScanned(df: DataFrame): Int =
-    scans(df).map(_.relation.location.inputFiles.length).sum
+    TestSpark.scanOf(df).inputPartitions
+      .map(_.asInstanceOf[GraftInputPartition].files.length).sum
 
   private def rowsOf(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
@@ -153,13 +155,94 @@ class GraftSqlSpec extends AnyFunSuite {
   test("narrow SELECT reads a narrow parquet schema") {
     val lake = seedLake("sql-cols", mor = false)
     val df = GraftSql.table(spark, lake.root).select("conv_id")
-    val s = scans(df)
-    assert(s.nonEmpty)
-    // _tombstone is read too — the liveness filter needs it; everything
-    // else (role, text, tool, ts, _lsn, turn_idx) must be pruned away
-    assert(s.head.requiredSchema.fieldNames.toSet ==
-      Set("conv_id", "_tombstone"),
-      s"read schema: ${s.head.requiredSchema.fieldNames.toSeq}")
+    val scan = TestSpark.scanOf(df).scan.asInstanceOf[GraftScan]
+    assert(scan.readSchema().fieldNames.toSeq == Seq("conv_id"))
+    // _tombstone may be read too — the liveness filter needs it unless
+    // every kept file is provably tombstone-free; everything else (role,
+    // text, tool, ts, _lsn, turn_idx) must be pruned away
+    assert(scan.readStruct.fieldNames.toSet - "_tombstone" == Set("conv_id"),
+      s"read schema: ${scan.readStruct.fieldNames.toSeq}")
+  }
+
+  test("column contract: snapshot schema minus _tombstone, in order," +
+      " without field-id or metadata-column metadata") {
+    val lake = seedLake("sql-schema", mor = false)
+    val snap = lake.currentSnapshot.get
+    // the snapshot's columns carry field ids — the frame must strip them
+    assert(snap.schema.fields.exists(graft.model.Schemas.fieldId(_).isDefined))
+    val want = snap.schema.fields.toSeq.filterNot(_.name == "_tombstone")
+      .map(f => (f.name, f.dataType))
+    assert(Seq("_lsn", "_src_part", "_src_off").forall(want.map(_._1).contains))
+    for (df <- Seq(GraftSql.table(spark, lake.root),
+                   GraftSql.table(spark, lake.root,
+                     asOf = lake.snapshots.head.snapshotId))) {
+      val got = df.schema
+      assert(got.fields.toSeq.map(f => (f.name, f.dataType)) == want)
+      assert(got.fields.forall(_.metadata == Metadata.empty),
+        got.fields.map(f => s"${f.name}: ${f.metadata.json}").mkString("; "))
+    }
+  }
+
+  test("_lsn range prunes files and equals read()") {
+    val lake = seedLake("sql-lsn", mor = false)
+    val total = lake.currentSnapshot.get.totalFiles
+    val df = GraftSql.table(spark, lake.root).filter(col("_lsn") >= 1000)
+      .select("conv_id", "turn_idx", "_lsn")
+    val n = filesScanned(df)
+    assert(n < total, s"expected _lsn pruning: $n vs total $total")
+    assert(rowsOf(df) == rowsOf(lake.read().filter(col("_lsn") >= 1000)
+      .select("conv_id", "turn_idx", "_lsn")))
+    assert(df.count() == 4)
+  }
+
+  test("TIMESTAMP_NTZ ranges prune by zone map — GraftSql and the catalog") {
+    val lake = new LakeTable(spark, TestSpark.tmpDir("sql-ntz"))
+    def ntzBatch(rows: Seq[(String, Int, String, Long)]): DataFrame =
+      batch(rows).withColumn("at", col("ts").cast("timestamp_ntz"))
+    val w1 = (0 until 48).flatMap { c =>
+      (0 until 4).map(t =>
+        (f"conv$c%02d", t, s"2024-01-0${1 + c % 5}T00:00:00", (c * 4 + t).toLong))
+    }
+    CdcApply.apply(lake, ntzBatch(w1), epoch = 1, nBuckets = 8)
+    CdcApply.apply(lake, ntzBatch((0 until 4).map(t =>
+      ("conv03", t, "2024-02-01T00:00:00", (1000 + t).toLong))),
+      epoch = 2, nBuckets = 8)
+    val snap = lake.currentSnapshot.get
+    assert(snap.schema("at").dataType == org.apache.spark.sql.types.TimestampNTZType)
+    val lo = java.time.LocalDateTime.parse("2024-01-31T12:00:00")
+    val expect = rowsOf(lake.read().filter(col("at") >= lit(lo))
+      .select("conv_id", "turn_idx", "_lsn"))
+    assert(expect.size == 4)
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    for (df <- Seq(
+        GraftSql.table(spark, lake.root).filter(col("at") >= lit(lo))
+          .select("conv_id", "turn_idx", "_lsn"),
+        spark.sql(s"SELECT conv_id, turn_idx, _lsn FROM graft.`${lake.root}`" +
+          " WHERE at >= TIMESTAMP_NTZ'2024-01-31 12:00:00'"))) {
+      val n = filesScanned(df)
+      assert(n < snap.totalFiles, s"NTZ pruning: $n vs total ${snap.totalFiles}")
+      assert(rowsOf(df) == expect)
+    }
+  }
+
+  test("file accounting of a two-lake join counts every registered lake") {
+    val a = seedLake("sql-fa", mor = false)
+    val b = seedLake("sql-fb", mor = false)
+    val ta = GraftSql.table(spark, a.root)
+    val tb = GraftSql.table(spark, b.root)
+    ta.createOrReplaceTempView("fa")
+    tb.createOrReplaceTempView("fb")
+    val q = spark.sql(
+      """SELECT count(*) AS n FROM fa JOIN fb
+        |ON fa.conv_id = fb.conv_id AND fa.turn_idx = fb.turn_idx
+        |WHERE fb._lsn >= 1000""".stripMargin)
+    assert(q.head().getLong(0) == 4)
+    val (scanned, total) = GraftSql.fileCounts(q, Seq(ta, tb))
+    assert(total == a.currentSnapshot.get.totalFiles +
+      b.currentSnapshot.get.totalFiles)
+    assert(scanned > 0 && scanned < total, s"$scanned of $total")
+    assert(GraftSql.snapshotOf(tb).map(_.snapshotId) ==
+      b.currentSnapshot.map(_.snapshotId))
   }
 
   test("time travel: asOf pins the pre-update snapshot") {
