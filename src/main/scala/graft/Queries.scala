@@ -345,13 +345,13 @@ object Queries {
 
   /** md5-derived integer hyperplane projection sign bit sum for planes
     * [pFrom, pTo): the oracle-reproducible random-hyperplane family shared
-    * by q27 and q29 (weight w(p,i) = hex4(md5("p:i")) - 32768). */
+    * by q27 and q29 (weight w(p,i) = hex4(md5("p:i")) - 32768), one exact
+    * dot product per plane (not 64 terms each: q27 outgrew codegen). */
   private def md5PlaneBucket(q: Column, dim: Int, pFrom: Int, pTo: Int): Column =
     (pFrom until pTo).map { p =>
-      val proj = (0 until dim).map { i =>
-        val w = conv(substring(md5(lit(s"$p:$i")), 1, 4), 16, 10).cast("long") - 32768L
-        element_at(q, i + 1) * w
-      }.reduce(_ + _)
+      val w = (0 until dim).map(i => Integer.parseInt(
+        org.apache.commons.codec.digest.DigestUtils.md5Hex(s"$p:$i").take(4), 16) - 32768L)
+      val proj = idotq(slice(q, 1, dim), typedLit(w))
       when(proj >= 0, lit(1L << (p - pFrom))).otherwise(lit(0L))
     }.reduce(_ + _)
 

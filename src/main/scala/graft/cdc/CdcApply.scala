@@ -54,6 +54,17 @@ object CdcApply {
         * ActivityAggregatesFunction.scala:244-248) */
       actions: Map[String, Long] = Map.empty) {
     def eventsPerSec: Double = if (durationSec > 0) rowsIn / durationSec else 0
+
+    /** The per-batch JSON metrics line every front end prints. */
+    def json(epoch: Long): String = {
+      val cf = Seq("inserted", "updated", "deleted", "delete_noop", "carried")
+        .map(k => s""""$k":${actions.getOrElse(k, 0L)}""").mkString(",")
+      s"""{"batchEpoch":$epoch,"snapshotId":${snapshot.snapshotId},""" +
+      s""""rowsIn":$rowsIn,"rowsOut":$rowsOut,"failedEvents":$failedEvents,""" +
+      s""""touchedBuckets":$touchedBuckets,""" +
+      f""""durationSec":$durationSec%.3f,"rowsPerSec":$eventsPerSec%.1f,""" +
+      s""""skipped":$skipped,"changeFeed":{$cf}}"""
+    }
   }
 
   def bucketOf(convId: Column, nBuckets: Int): Column =
@@ -155,7 +166,7 @@ object CdcApply {
   }
 
   /** Lineage + row count when the caller derived them from changelog file
-    * footers (CdcDriver.probeFromFooters) — skips the probe scan.
+    * footers (FeedStep.probe / probeFiles) — skips the probe scan.
     * `keysNullFree`: footer null-counts prove conv_id/turn_idx/_lsn contain
     * no nulls, so validation reduces to a one-column op scan.
     * `schemaJsons`: the distinct Spark StructType JSONs found in the files'

@@ -107,10 +107,10 @@ final class CdcDriver(
       * quarantine). */
     format: String = "parquet") {
 
-  private val followers = new FollowerStep(spark, aggLake, matView,
-    matViewAggs, searchIndex, indexCompactChain, indexEvery, replica,
-    replicaWhere, replicaCols, keepSnapshots, morCompactChain)
-  private val feed = new FeedProbe(lake, partBase)
+  private val step = new FeedStep(lake, nBuckets, saltBuckets, patchEnabled,
+    changeFeed, mor, source, partBase, new FollowerStep(spark, aggLake,
+      matView, matViewAggs, searchIndex, indexCompactChain, indexEvery,
+      replica, replicaWhere, replicaCols, keepSnapshots, morCompactChain))
 
   /** Apply up to `maxBatches` pending micro-batches; returns per-batch stats.
     * Safe to call again after a crash or mid-run stop. */
@@ -119,7 +119,7 @@ final class CdcDriver(
     // leaves a follower behind while the main batch is fenced on resume —
     // reconcile from the lake commit log (also the path that backfills a
     // follower attached after the fact).
-    followers.catchUp(lake)
+    step.catchUp()
     val segs = ChangelogGen.listSegments(changelogDir)
     // EPOCH-DOMAIN GUARDS (round-3 advice): epochs are only comparable
     // within one driver discipline. An UNNAMED replay resumes from the
@@ -154,14 +154,12 @@ final class CdcDriver(
       val paths = group.map(s => s"$changelogDir/seg=$s")
       val probe =
         if (format == "json") None // no footers; merge runs its probe scan
-        else CdcApply.phase("driver-footer-probe") {
-          feed.probe(paths)
-        }
+        else CdcApply.phase("driver-footer-probe")(step.probe(paths))
       // The footer probe already read every file's footer — its embedded
       // Spark schema JSONs give the batch's (additively merged) schema for
       // free, so the usual distributed mergeSchema inference job (a serial
       // per-batch cost that Amdahl-limits scaling) only runs as a fallback.
-      val batch0 = CdcApply.phase("driver-read-schema") {
+      val batch = CdcApply.phase("driver-read-schema") {
         if (format == "json")
           graft.changelog.JsonChangelog.readSegments(spark, paths, changelogDir)
         else probe.flatMap(p => FooterProbe.mergedSchema(p.schemaJsons)) match {
@@ -175,30 +173,15 @@ final class CdcDriver(
       }
       // `seg=`/`p=` path dirs (sharded binlog layout) surface as partition
       // columns duplicating the data; their real job is footer probing
-      val batch = feed.shift(batch0.drop("p", "seg"))
       // epoch = exclusive upper segment bound -> fencing token
       val epoch = group.max + 1
-      val stats = CdcApply.apply(lake, batch, epoch, nBuckets, saltBuckets,
-        probeInfo = probe, patchEnabled = patchEnabled,
-        changeFeed = changeFeed, mor = mor, source = source)
-      followers.afterCommit(lake, stats)
+      val stats = step.apply(batch.drop("p", "seg"), epoch, probe)
       out += stats
-      if (!quiet) {
-        val s = stats
-        val cf = Seq("inserted", "updated", "deleted", "delete_noop", "carried")
-          .map(k => s""""$k":${s.actions.getOrElse(k, 0L)}""").mkString(",")
-        println(
-          s"""{"batchEpoch":$epoch,"snapshotId":${s.snapshot.snapshotId},""" +
-          s""""rowsIn":${s.rowsIn},"rowsOut":${s.rowsOut},""" +
-          s""""failedEvents":${s.failedEvents},""" +
-          s""""touchedBuckets":${s.touchedBuckets},""" +
-          f""""durationSec":${s.durationSec}%.3f,"rowsPerSec":${s.eventsPerSec}%.1f,""" +
-          s""""skipped":${s.skipped},"changeFeed":{$cf}}""")
-      }
+      if (!quiet) println(stats.json(epoch))
     }
     // batched refresh: the window may end mid-cycle — a completed run
     // leaves every follower current (fenced no-op when it is)
-    followers.catchUp(lake)
+    step.catchUp()
     out.toSeq
   }
 }

@@ -3,19 +3,21 @@ package graft.cdc
 import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.lake.LakeTable
+import graft.streaming.GraftSink
 
 /**
  * Structured Streaming front-end for the same MERGE: tails the changelog
- * directory with the built-in file source and applies each micro-batch via
- * `foreachBatch`, fenced on the checkpointed `batchId` as the commit epoch.
- *
- * foreachBatch is at-least-once — after a crash the last batch can be
- * re-delivered with the same batchId; the lake commit's epoch fence turns
- * that into exactly-once (the Spark-native version of the reference's
+ * directory with the built-in file source and writes it through the
+ * `graft-lake` sink, which applies each micro-batch with the driver's
+ * [[FeedStep]] — footer probe of the batch's files included (JSON and flat
+ * `seg=N/` feeds fall back to the merge's probe scan). The V1 sink is
+ * at-least-once — after a crash the last batch can be re-delivered with the
+ * same batchId — and the epoch fence makes it exactly-once (the reference's
  * at-least-once Kafka sinks + conditional writes,
  * FlinkKafkaConnector.scala:18 + AssessmentAggregatorFunction.scala:138-162).
  *
@@ -100,40 +102,31 @@ object CdcStream {
         * envelopes via JsonChangelog — `schema` is ignored; the sidecar
         * types the rows). */
       format: String = "parquet"): StreamingQuery =
-    tail(spark, changelogDir, lake, checkpointDir, schema, nBuckets,
-      saltBuckets, maxFilesPerTrigger, trigger, patchEnabled, changeFeed, mor,
-      source, partBase, onBatch, format,
-      new FollowerStep(spark, aggLake, matView, matViewAggs, searchIndex,
-        indexCompactChain, indexEvery, replica, replicaWhere, replicaCols,
-        keepSnapshots, morCompactChain))
+    tail(spark, changelogDir, checkpointDir, schema, maxFilesPerTrigger,
+      trigger, onBatch, format, new FeedStep(lake, nBuckets, saltBuckets,
+        patchEnabled, changeFeed, mor, source, partBase, new FollowerStep(
+          spark, aggLake, matView, matViewAggs, searchIndex,
+          indexCompactChain, indexEvery, replica, replicaWhere, replicaCols,
+          keepSnapshots, morCompactChain)))
 
-  /** [[start]] with its derived-state upkeep already built, so [[run]] can
-    * reuse one `followers` across restarts and catch it up after a drain. */
+  /** [[start]] with its per-batch step already built, so [[run]] can reuse
+    * one step across restarts and catch it up after a drain. */
   private def tail(
       spark: SparkSession,
       changelogDir: String,
-      lake: LakeTable,
       checkpointDir: String,
       schema: StructType,
-      nBuckets: Int,
-      saltBuckets: Int,
       maxFilesPerTrigger: Int,
       trigger: Trigger,
-      patchEnabled: Boolean,
-      changeFeed: Boolean,
-      mor: Boolean,
-      source: Option[String],
-      partBase: Int,
       onBatch: Long => Unit,
       format: String,
-      followers: FollowerStep): StreamingQuery = {
-    bindOrRefuse(lake, checkpointDir, source)
+      step: FeedStep): StreamingQuery = {
+    bindOrRefuse(step.lake, checkpointDir, step.source)
     // Follower reconciliation: a crash between a main commit and its
     // upkeep leaves a follower behind while the replayed batch fences, and
     // a drained run may end mid index window — catch up from the commit
     // log before tailing.
-    followers.catchUp(lake)
-    val feed = new FeedProbe(lake, partBase)
+    step.catchUp()
     val src =
       if (format == "json") {
         val rs = graft.changelog.JsonChangelog.rowSchema(changelogDir)
@@ -151,20 +144,9 @@ object CdcStream {
         // `seg=N/p=P/` archive layouts without partition-column inference
         .option("recursiveFileLookup", "true")
         .parquet(changelogDir)
-    src.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        onBatch(batchId)
-        // No footer probe: the micro-batch arrives as an RDD-backed plan
-        // with no input files, so the tailer pays CdcApply's lineage probe
-        // scan (the batch driver probes its segment footers instead).
-        val stats = CdcApply.apply(lake, feed.shift(batch), epoch = batchId + 1,
-          nBuckets, saltBuckets, patchEnabled = patchEnabled,
-          changeFeed = changeFeed, mor = mor, source = source)
-        followers.afterCommit(lake, stats)
-      }
-      .start()
+    GraftBridge.startSink(src,
+      new GraftSink(step, probeInput = format != "json", onBatch),
+      checkpointDir, trigger)
   }
 
   /** Run to termination (AvailableNow: drain-and-exit; a live trigger runs
@@ -212,16 +194,16 @@ object CdcStream {
       partBase: Int = 0,
       onBatch: Long => Unit = _ => (),
       format: String = "parquet"): Unit = {
-    val followers = new FollowerStep(spark, aggLake, matView, matViewAggs,
-      searchIndex, indexCompactChain, indexEvery, replica, replicaWhere,
-      replicaCols, keepSnapshots, morCompactChain)
+    val step = new FeedStep(lake, nBuckets, saltBuckets, patchEnabled,
+      changeFeed, mor, source, partBase, new FollowerStep(spark, aggLake,
+        matView, matViewAggs, searchIndex, indexCompactChain, indexEvery,
+        replica, replicaWhere, replicaCols, keepSnapshots, morCompactChain))
     var attempt = 0
     var running = true
     while (running) {
       val epochBefore = lake.currentSnapshot.map(_.epoch).getOrElse(0L)
-      val q = tail(spark, changelogDir, lake, checkpointDir, schema,
-        nBuckets, saltBuckets, maxFilesPerTrigger, trigger, patchEnabled,
-        changeFeed, mor, source, partBase, onBatch, format, followers)
+      val q = tail(spark, changelogDir, checkpointDir, schema,
+        maxFilesPerTrigger, trigger, onBatch, format, step)
       try {
         q.awaitTermination()
         running = false // clean termination (drain done or caller stop)
@@ -241,7 +223,7 @@ object CdcStream {
     }
     // batched refresh: a drain may end mid index window — like
     // CdcDriver.run, a completed run leaves every follower current
-    followers.catchUp(lake)
+    step.catchUp()
   }
 
   /** Enforce the one-lake-one-checkpoint pairing. The checkpoint side

@@ -6,10 +6,10 @@ import graft.lake.LakeTable
 import graft.search.SearchIndex
 
 /**
- * Derived-state upkeep after each commit, shared by the batch driver and the
- * streaming tailer: the materialized views (conv_agg is one), the search
- * index and the replica follow the lake, the MoR fold policy runs, and
- * retention expires what no follower still needs.
+ * Derived-state upkeep after each commit, shared by every front end through
+ * [[FeedStep]]: the materialized views (conv_agg is one), the search index
+ * and the replica follow the lake, the MoR fold policy runs, and retention
+ * expires what no follower still needs.
  *
  * Every follower is catch-up by construction (fenced no-op when current), so
  * one `catchUp` heals a crash that landed between a main commit and its
@@ -25,19 +25,19 @@ import graft.search.SearchIndex
  * cursor and falls back to a superset when history is gone, so views set no
  * floor. Each derived table keeps `keepSnapshots` of its own history.
  */
-private[cdc] final class FollowerStep(
+private[graft] final class FollowerStep(
     spark: SparkSession,
-    aggLake: Option[LakeTable],
-    matView: Option[LakeTable],
-    matViewAggs: Seq[MatView.AggCol],
-    searchIndex: Option[LakeTable],
-    indexCompactChain: Int,
-    indexEvery: Int,
-    replica: Option[LakeTable],
-    replicaWhere: String,
-    replicaCols: Seq[String],
-    keepSnapshots: Int,
-    morCompactChain: Int) {
+    aggLake: Option[LakeTable] = None,
+    matView: Option[LakeTable] = None,
+    matViewAggs: Seq[MatView.AggCol] = Nil,
+    searchIndex: Option[LakeTable] = None,
+    indexCompactChain: Int = 16,
+    indexEvery: Int = 1,
+    replica: Option[LakeTable] = None,
+    replicaWhere: String = "",
+    replicaCols: Seq[String] = Nil,
+    keepSnapshots: Int = 0,
+    morCompactChain: Int = 16) {
 
   private val views: Seq[(LakeTable, Option[MatView.Config])] =
     aggLake.map(_ -> Some(MatView.convAgg)).toSeq ++ matView.map(_ ->

@@ -1,7 +1,7 @@
 package graft.cdc
 
 /**
- * Footer-derived batch metadata for the batch driver: per-source-partition
+ * Footer-derived batch metadata for a changelog batch: per-source-partition
  * lineage + row count + key-null-freedom proof for a set of changelog
  * parquet files, computed from parquet FOOTERS on the driver (O(files)
  * metadata IO, no cluster scan — the reference reads the same lineage
@@ -85,36 +85,4 @@ object FooterProbe {
         if (stats.exists(_._5.isEmpty)) Nil
         else stats.flatMap(_._5).distinct))
   }
-}
-
-/** One feed against one lake: the batch driver's footer probe, and the
-  * `_src_part` namespacing both loops apply. The null-free proof covers
-  * the LAKE'S OWN key columns: probing the transcript names against a
-  * generic-key table would "prove" the wrong columns null-free and let a
-  * null real key skip validation (a fresh lake seeds as transcripts, which
-  * is also what both loops' merge seeds; the spec is fixed once that first
-  * commit lands). Multi-feed ingest namespaces the feed's partition ids by
-  * `partBase`, in the data and in the probe's lineage alike. */
-private[cdc] final class FeedProbe(lake: graft.lake.LakeTable, partBase: Int) {
-
-  /** Probe a batch's `seg=N/p=P/` segment directories. None when the
-    * layout lacks `p=` dirs (flat segments fall back to CdcApply's probe
-    * scan). */
-  def probe(segDirs: Seq[String]): Option[CdcApply.ProbeInfo] = {
-    val ks = lake.currentSnapshot.map(_.keySpec)
-      .getOrElse(graft.model.Schemas.KeySpec.transcripts)
-    val p = FooterProbe.fromFiles(
-      segDirs.flatMap(graft.lake.LakeIO.partitionFiles(_, "p")),
-      ks.keyCols.toSet + "_lsn", ks.bucketCols)
-    if (partBase == 0) p
-    else p.map(p => p.copy(lineage = p.lineage.map(l =>
-      l.copy(srcPart = l.srcPart + partBase))))
-  }
-
-  /** The batch with its `_src_part` column namespaced. */
-  def shift(batch: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (partBase == 0) batch
-    else batch.withColumn("_src_part",
-      org.apache.spark.sql.functions.col("_src_part") +
-        org.apache.spark.sql.functions.lit(partBase))
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.cdc.{CdcApply, CdcStream}
+import graft.cdc.{CdcStream, FeedStep, FollowerStep}
 import graft.lake.{LakeIO, LakeTable}
 import graft.model.Schemas
 
@@ -20,23 +20,25 @@ import graft.model.Schemas
  *     .start()
  * }}}
  *
- * Each micro-batch runs the same epoch-fenced CDC MERGE as the batch
- * driver and the foreachBatch tailer (CdcApply): the sink is exactly-once
- * because the commit epoch is the checkpointed batchId + 1 — a crashed and
- * re-delivered batch fences to a no-op — and the checkpoint⇄lake binding
- * refuses the fresh-checkpoint-against-populated-lake footgun the same way
- * CdcStream does. This completes the streaming surface the reference wires
- * job-by-job (each Flink job both consumes AND re-emits Kafka topics,
- * FlinkKafkaConnector.scala:13-18): with the `graft-changes` SOURCE on one
- * lake and this sink on another, a cascading lake→transform→lake pipeline
- * is plain `readStream → select → writeStream`, checkpointed end-to-end,
- * with exactly-once at both ends (see [[GraftCascade]]).
+ * Each micro-batch runs the batch driver's per-batch step
+ * ([[graft.cdc.FeedStep]]: the epoch-fenced CDC MERGE, then the
+ * [[graft.cdc.FollowerStep]] upkeep) and prints its JSON stats line on
+ * stderr. The V1 sink is at-least-once (a crashed batch is re-delivered
+ * with the same batchId); the commit epoch is batchId + 1, so the epoch
+ * fence makes it exactly-once. The checkpoint⇄lake binding refuses a fresh
+ * checkpoint against a populated lake, as CdcStream does. The CdcStream
+ * tailer writes through this sink; with the `graft-changes` SOURCE on one
+ * lake and this sink on another, a lake→transform→lake cascade is plain
+ * `readStream → select → writeStream`, exactly-once at both ends (see
+ * [[GraftCascade]]; the reference wires this job-by-job, each Flink job
+ * consuming AND re-emitting Kafka topics, FlinkKafkaConnector.scala:13-18).
  *
  * Input contract = the changelog-event shape (CdcApply): `op` plus the
  * business/key columns, `_lsn` as the global version, `_src_part`/`_src_off`
- * lineage. Rows are arbitrary transformed streams, not files — so there is
- * no footer fast path here; the merge pays the one probe pass a JSON feed
- * pays (documented trade, BASELINE.md round-3 JSON numbers).
+ * lineage. Through this provider the rows are an arbitrary transformed
+ * stream, not files — so no footer fast path: the merge pays the one probe
+ * pass a JSON feed pays (BASELINE.md round-3 JSON numbers). Only the
+ * tailer's sink probes its changelog files' footers (`probeInput`).
  *
  * Options (contract values seed a NEW lake; an existing lake's stored
  * contract is authoritative, exactly like the batch driver):
@@ -76,64 +78,43 @@ class GraftSinkProvider extends StreamSinkProvider with DataSourceRegister {
         "bucketcols without keycols — pass both (or neither for the " +
         "transcripts default)")
     }
-    new GraftSink(sqlContext.sparkSession, path, ckpt,
+    val spark = sqlContext.sparkSession
+    LakeIO.mkdirs(path)
+    val lake = new LakeTable(spark, path)
+    // refuse a fresh checkpoint against a populated lake before any batch
+    val source = parameters.get("source").filter(_.nonEmpty)
+    CdcStream.bindOrRefuse(lake, ckpt, source)
+    new GraftSink(new FeedStep(lake,
       nBuckets = parameters.get("nbuckets").map(_.toInt).getOrElse(64),
       saltBuckets = parameters.get("salt").map(_.toInt).getOrElse(0),
-      keys = keys,
       patchEnabled = parameters.get("patch").exists(_.toBoolean),
       changeFeed = parameters.get("changefeed").forall(_.toBoolean),
       mor = parameters.get("mor").exists(_.toBoolean),
-      morChain = parameters.get("morchain").map(_.toInt).getOrElse(16),
-      keep = parameters.get("keep").map(_.toInt).getOrElse(0),
-      source = parameters.get("source").filter(_.nonEmpty))
+      source = source, partBase = 0,
+      followers = new FollowerStep(spark,
+        keepSnapshots = parameters.get("keep").map(_.toInt).getOrElse(0),
+        morCompactChain = parameters.get("morchain").map(_.toInt).getOrElse(16)),
+      keys = keys))
   }
 }
 
-class GraftSink(
-    spark: SparkSession,
-    path: String,
-    checkpointDir: String,
-    nBuckets: Int,
-    saltBuckets: Int,
-    keys: Schemas.KeySpec,
-    patchEnabled: Boolean,
-    changeFeed: Boolean,
-    mor: Boolean,
-    morChain: Int,
-    keep: Int,
-    source: Option[String]) extends Sink {
-
-  LakeIO.mkdirs(path)
-  private val lake = new LakeTable(spark, path)
-  // same data-loss guard as the tailer: pairing a FRESH checkpoint with a
-  // populated lake would restart batchIds at 0 and silently fence every
-  // early batch — refuse at sink construction, before any batch runs
-  CdcStream.bindOrRefuse(lake, checkpointDir, source)
+/** `probeInput`: the batch's input files are changelog files to footer-probe
+  * (the tailer). `onBatch`: test-only fault hook, run before the merge. */
+private[graft] class GraftSink(
+    step: FeedStep,
+    probeInput: Boolean = false,
+    onBatch: Long => Unit = _ => ()) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val batch = GraftBridge.batchDataFrame(spark, data)
-    val stats = CdcApply.apply(lake, batch, epoch = batchId + 1,
-      nBuckets = nBuckets, saltBuckets = saltBuckets,
-      patchEnabled = patchEnabled, changeFeed = changeFeed, mor = mor,
-      keys = keys, source = source)
-    if (!stats.skipped && morChain > 0 && lake.currentSnapshot.exists(_.mor))
-      CdcApply.maybeFold(lake, morChain)
-    if (!stats.skipped && keep > 0) lake.expireSnapshots(keep)
-    // the same per-batch metrics line every other front-end emits (the
-    // north rule's per-batch rows/sec + lineage contract): stderr, so a
-    // CLI's stdout stays a clean JSON protocol
-    val cf = Seq("inserted", "updated", "deleted", "delete_noop", "carried")
-      .map(k => s""""$k":${stats.actions.getOrElse(k, 0L)}""").mkString(",")
-    System.err.println(
-      s"""{"sink":"$path","batchId":$batchId,""" +
-      s""""snapshotId":${stats.snapshot.snapshotId},""" +
-      s""""rowsIn":${stats.rowsIn},"rowsOut":${stats.rowsOut},""" +
-      s""""failedEvents":${stats.failedEvents},""" +
-      s""""touchedBuckets":${stats.touchedBuckets},""" +
-      f""""durationSec":${stats.durationSec}%.3f,""" +
-      f""""rowsPerSec":${stats.eventsPerSec}%.1f,""" +
-      s""""skipped":${stats.skipped},"changeFeed":{$cf}}""")
+    onBatch(batchId)
+    val probe = if (probeInput) step.probeFiles(data.inputFiles.toSeq) else None
+    // the lake's session, not the micro-batch's: an observe completes only
+    // in the session that registered it, where the merge's plan is rooted
+    val stats = step.apply(
+      GraftBridge.batchDataFrame(step.lake.spark, data), batchId + 1, probe)
+    // stderr, so a CLI's stdout stays a clean JSON protocol
+    System.err.println(stats.json(batchId + 1))
   }
 
-  override def toString: String = s"GraftSink[$path]"
+  override def toString: String = s"GraftSink[${step.lake.root}]"
 }

@@ -2,6 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Minimal accessor for `Dataset.ofRows` (private[sql]) so graft can wrap a
   * custom logical operator ([[graft.plans.SortedLwwDedup]]) into a public
@@ -72,6 +74,16 @@ object GraftBridge {
     val rdd = data.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.toRdd
     classic.internalCreateDataFrame(rdd, data.schema, isStreaming = false)
+  }
+
+  /** Start `src` into a V1 `sink` instance (append mode), as
+    * `DataStreamWriter` starts its built-in `ForeachBatchSink`. */
+  def startSink(src: DataFrame, sink: Sink, checkpointDir: String,
+                trigger: Trigger): StreamingQuery = {
+    val ds = src.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sessionState.streamingQueryManager.startQuery(None,
+      Some(checkpointDir), ds, Map.empty, sink, OutputMode.Append(),
+      trigger = trigger)
   }
 
   /** Catalyst Expression -> public Column, for operators that rewrite a

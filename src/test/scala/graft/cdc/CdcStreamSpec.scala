@@ -8,7 +8,8 @@ import graft.lake.LakeTable
 import graft.model.Schemas
 import graft.search.SearchIndex
 
-/** The Structured Streaming front-end: file-source tail + foreachBatch MERGE
+/** The Structured Streaming front-end: file-source tail written through the
+  * `graft-lake` sink, each batch merged with the driver's per-batch step and
   * fenced on the checkpointed batchId (north rule's binlog tailer shape). */
 class CdcStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -307,6 +308,75 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(head.epoch == 11, s"${head.epoch} batches applied")
     assert(SearchIndex.indexedSourceSnapshot(idx) == head.snapshotId)
     assert(postings(idx) == fromScratch(lake, "drain")._4)
+  }
+
+  /** Spark jobs started while `body` runs. The async listener bus is
+    * drained by a marker job with a distinctive call site run AFTER the
+    * body: the bus is FIFO, so once the marker's job start is observed,
+    * every job of the body has been too. */
+  private def jobsDuring(body: => Unit): Int = {
+    val marker = s"graft-drain-marker-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(_.name.startsWith(marker))) done.set(true)
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setCallSite(marker)
+      try spark.sparkContext.parallelize(1 to 1, 1).count()
+      finally spark.sparkContext.clearCallSite()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!done.get() && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done.get(), "listener bus did not drain")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a tailer trigger takes the driver's footer probe: same Spark jobs" +
+      " as the driver's batch, same lineage") {
+    val dir = TestSpark.tmpDir("probe-cl")
+    // one file per segment under p=0: a one-file trigger is a one-segment
+    // batch whose file sits in its own p= dir
+    ChangelogGen.write(spark, dir, ChangelogGen.Config(
+      nEvents = 1000, nConvs = 20, turnsPerConv = 6, pUpdate = 0.3,
+      pDelete = 0.08, pDup = 0.1, segSize = 500, nSrcPartitions = 1,
+      filesPerSeg = 1))
+    // 4 buckets: a 500-event segment is a dense batch (no bucket probe), so
+    // the measured batch's first scan of the events is the merge itself
+    val driven = new LakeTable(spark, TestSpark.tmpDir("probe-driver"))
+    val driver = new CdcDriver(spark, dir, driven, segmentsPerBatch = 1,
+      nBuckets = 4, quiet = true)
+    driver.run(maxBatches = 1)
+    val driverJobs = jobsDuring(driver.run(maxBatches = 1))
+
+    // the tailer sees segment 0, then segment 1 arrives
+    val tailedDir = TestSpark.tmpDir("probe-tailed")
+    def publish(seg: Int): Unit = java.nio.file.Files.move(
+      java.nio.file.Paths.get(dir, s"seg=$seg"),
+      java.nio.file.Paths.get(tailedDir, s"seg=$seg"))
+    val tailed = new LakeTable(spark, TestSpark.tmpDir("probe-tailer"))
+    val ckpt = TestSpark.tmpDir("probe-ckpt")
+    def tail(): Unit = CdcStream.run(spark, tailedDir, tailed, ckpt,
+      Schemas.changeEventSchema, nBuckets = 4, maxFilesPerTrigger = 1)
+    publish(0)
+    tail()
+    publish(1)
+    val tailerJobs = jobsDuring(tail())
+
+    assert(driven.currentSnapshot.get.epoch == 2)
+    assert(tailed.currentSnapshot.get.epoch == 2)
+    // the merge's lineage probe scan would be one more job
+    assert(tailerJobs == driverJobs,
+      s"tailer trigger ran $tailerJobs jobs, driver batch $driverJobs")
+    assert(tailed.currentSnapshot.get.lineage ==
+      driven.currentSnapshot.get.lineage)
+    assert(CdcOracle.tableState(tailed.read()) ==
+      CdcOracle.tableState(driven.read()))
   }
 
   test("driver and tailer read a file's source partition from its own p=" +

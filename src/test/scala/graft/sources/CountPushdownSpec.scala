@@ -98,6 +98,53 @@ class CountPushdownSpec extends AnyFunSuite {
       "covered filtered count read data files — claiming did not happen")
   }
 
+  test("mixed pruned + claimed WHERE: the count reads only the kept files'" +
+      " metadata") {
+    val dir = TestSpark.tmpDir("cnt-mixed")
+    val lake = new LakeTable(spark, dir)
+    def withTs(df: DataFrame) =
+      df.withColumn("ts", timestamp_seconds(lit(1704067200L) + col("_lsn")))
+    val w1 = (0 until 32).flatMap(c =>
+      (0 until 4).map(t => (f"conv$c%02d", t, (c * 4 + t).toLong, "U")))
+    CdcApply.apply(lake, withTs(batch(w1)), epoch = 1, nBuckets = 1)
+    val w2 = (0 until 4).flatMap(c => (0 until 4).map(t =>
+      (f"conv$c%02d", t, (1000 + c * 4 + t).toLong, if (c < 2) "D" else "U")))
+    CdcApply.apply(lake, withTs(batch(w2)), epoch = 2, nBuckets = 1)
+    // one bucket clustered on ts and split every 16 rows: the files cover
+    // disjoint, ascending ts ranges
+    graft.lake.Compaction.compact(lake, targetFileRows = 16,
+      clusterCol = Some("ts"))
+    val files = lake.currentSnapshot.get.files.sortBy(_.zone("ts").get._1)
+    assert(files.size >= 4, s"${files.size} files")
+    // `ts >= mid` at a file boundary: the files before it are pruned, every
+    // file from it on lies fully inside the range (claimed)
+    val mid = files(files.size / 2).zone("ts").get._1
+    assert(files.forall { f =>
+      val (lo, hi) = f.zone("ts").get
+      hi < mid || lo >= mid })
+    val midLit = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+      .withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.Instant.EPOCH.plus(mid, java.time.temporal.ChronoUnit.MICROS))
+    val where = s" WHERE ts >= TIMESTAMP '$midLit'"
+    val total = lake.read().count()
+    val truth = lake.read().filter(col("ts") >= timestamp_micros(lit(mid)))
+      .count()
+    assert(truth > 0 && truth < total && truth != total - truth,
+      s"truth $truth of $total does not tell the halves apart")
+    assert(countSql(dir, where) == truth)
+
+    // delete one pruned file and one kept file: the answer still equals
+    // the truth, so it is the kept files' live counts, read from metadata
+    for (f <- Seq(files.head, files.last))
+      assert(new java.io.File(f.path).delete(), s"could not delete ${f.path}")
+    assert(countSql(dir, where) == truth,
+      "mixed pruned+claimed count read data files or the wrong files")
+    intercept[Exception] { // a real scan of the kept half breaks
+      spark.sql(s"SELECT sum(turn_idx) FROM graft.`$dir`$where").head()
+    }
+  }
+
   test("min/max answer from zone bounds on tombstone-free files") {
     val dir = TestSpark.tmpDir("cnt-minmax")
     val lake = new LakeTable(spark, dir)

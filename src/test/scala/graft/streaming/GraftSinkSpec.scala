@@ -30,8 +30,10 @@ class GraftSinkSpec extends AnyFunSuite {
       nBuckets = 8, quiet = true))
   }
 
-  /** Drain the cascade to exhaustion (AvailableNow). */
-  private def cascade(up: LakeTable, downRoot: String, ckpt: String): Unit = {
+  /** Drain the cascade to exhaustion (AvailableNow); `opts` are extra sink
+    * options. */
+  private def cascade(up: LakeTable, downRoot: String, ckpt: String,
+                      opts: Map[String, String] = Map.empty): Unit = {
     val q = spark.readStream.format("graft-changes")
       .option("path", up.root)
       .option("withsnapshot", "true")
@@ -41,6 +43,7 @@ class GraftSinkSpec extends AnyFunSuite {
       .option("path", downRoot)
       .option("checkpointLocation", ckpt)
       .option("nbuckets", "8")
+      .options(opts)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -74,16 +77,35 @@ class GraftSinkSpec extends AnyFunSuite {
     assert(downLake.snapshots.size == snaps)
   }
 
+  test("sink upkeep: morchain bounds the delta chains and keep bounds the" +
+      " retained snapshots") {
+    val (up, driver) = mkUpstream("upkeep")
+    val down = TestSpark.tmpDir("gsink-down-upkeep")
+    val ckpt = TestSpark.tmpDir("gsink-ckpt-upkeep")
+    val downLake = new LakeTable(spark, down)
+    for (_ <- 0 until 4) {
+      driver.run(maxBatches = 2)
+      cascade(up, down, ckpt,
+        Map("mor" -> "true", "morchain" -> "2", "keep" -> "1"))
+      val head = downLake.currentSnapshot.get
+      assert(head.mor)
+      val chains = graft.cdc.CdcApply.chainLengths(head)
+      assert(chains.nonEmpty && chains.values.max < 3, s"chains $chains")
+      assert(downLake.snapshots.size <= 1,
+        s"${downLake.snapshots.size} snapshots retained with keep=1")
+      assert(image(downLake) == image(up))
+    }
+  }
+
   test("redelivered batch fences to a no-op (exactly-once)") {
     val (up, driver) = mkUpstream("fence", events = 1500)
     driver.run(maxBatches = 2)
     val down = TestSpark.tmpDir("gsink-down-fence")
-    val ckpt = TestSpark.tmpDir("gsink-ckpt-fence")
 
-    val sink = new GraftSink(spark, down, ckpt, nBuckets = 8,
-      saltBuckets = 0, keys = graft.model.Schemas.KeySpec.transcripts,
-      patchEnabled = false, changeFeed = true, mor = false, morChain = 0,
-      keep = 0, source = None)
+    val sink = new GraftSink(new graft.cdc.FeedStep(new LakeTable(spark, down),
+      nBuckets = 8, saltBuckets = 0, patchEnabled = false, changeFeed = true,
+      mor = false, source = None, partBase = 0,
+      followers = new graft.cdc.FollowerStep(spark, morCompactChain = 0)))
     val delta = graft.lake.ChangeFeedReader.between(spark, up, -1L,
       up.currentSnapshot.get.snapshotId,
       imageCols = Seq("role", "text", "tool", "ts"))
