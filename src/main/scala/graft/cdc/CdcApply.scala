@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -18,7 +18,7 @@ import graft.lake.{LakeTable, PartitionLineage, Snapshot}
  *     one reduce task per touched bucket(conv_id)     — the only exchange
  *     sortWithinPartitions(bucket, keyhash, key, lsn desc)
  *     first-row-per-key, streaming (LWW winner)       — reuses the sort
- *     write partitionBy(bucket)                       — ordering satisfied
+ *     bucket writer: one file per bucket, stats back  — no extra sort
  *
  * Deletes persist as tombstone rows. This subsumes within-batch dedup
  * (reference D2: AssessmentAggregatorFunction.scala:164-168),
@@ -32,8 +32,8 @@ import graft.lake.{LakeTable, PartitionLineage, Snapshot}
  * Scale design: the table is hash-bucketed by conv_id; only buckets present
  * in the batch are read and rewritten (copy-on-write), so batch cost is
  * O(touched data), not O(table). Lineage/row counts come from changelog
- * parquet footers (or a two-int-column probe), file stats from written-file
- * footers — all metadata work is O(files), not O(rows).
+ * parquet footers (or a two-int-column probe), file stats from the footers
+ * the write tasks just wrote — all metadata work is O(files), not O(rows).
  */
 object CdcApply {
 
@@ -66,6 +66,10 @@ object CdcApply {
       s""""skipped":$skipped,"changeFeed":{$cf}}"""
     }
   }
+
+  // names of the merge's `observe` metrics
+  private val InvalidMetric = "graft_invalid_events"
+  private val ChangeFeedMetric = "graft_change_feed"
 
   def bucketOf(convId: Column, nBuckets: Int): Column =
     bucketOfCols(Seq(convId), nBuckets)
@@ -329,22 +333,27 @@ object CdcApply {
       if (probeInfo.exists(_.keysNullFree) && checks.isEmpty)
         (col("op").isNull || !col("op").isin(allowedOps: _*))
       else reason.isNotNull
-    // vObs is filled by whichever Spark job FIRST scans the batch (the
-    // bucket probe for small batches, else the merge write itself) — read
-    // only after one of those actions completed.
-    val vObs = org.apache.spark.sql.Observation()
+    // The invalid count is a named observation, read from the metrics of
+    // a plan that ran it: the merge write, else the first probe. Reading
+    // it off that plan needs no listener, so it works whichever session
+    // the batch was built on. When no plan that ran carries it (none
+    // scanned the batch, or the optimizer emptied one whose every row is
+    // provably invalid), the count takes its own scan.
     val batchObserved =
       if (validate)
-        batch.observe(vObs,
+        batch.observe(InvalidMetric,
           sum(when(checkPred, 1L).otherwise(0L)).as("invalid"))
       else batch
     val cleanBatch =
       if (validate) batchObserved.filter(!checkPred) else batchObserved
-    def observedInvalid(): Long =
+    // the probes' observations, the earlier probe's kept
+    var probeObserved = Map.empty[String, Row]
+    def invalidCount(observed: Map[String, Row]): Long =
       if (!validate) 0L
-      else vObs.get.get("invalid") match {
-        case Some(n: Number) => n.longValue()
-        case _ => 0L
+      else (probeObserved ++ observed).get(InvalidMetric) match {
+        case Some(r) => if (r.isNullAt(0)) 0L else r.getLong(0)
+        case None => phase("validate") {
+          batchObserved.filter(checkPred).count() }
       }
     // Rare path: only a corrupted batch pays this second scan.
     def quarantine(nInvalid: Long): Unit = if (nInvalid > 0) {
@@ -430,12 +439,16 @@ object CdcApply {
     val (rowsIn, batchLineage) = probeInfo match {
       case Some(pi) => (pi.rowsIn, pi.lineage)
       case None =>
-        val probe = phase("probe") { batchObserved
-          .select(col("_src_part"), col("_src_off"))
-          .groupBy("_src_part")
-          .agg(min("_src_off").as("lo"), max("_src_off").as("hi"),
-            count(lit(1)).as("n"))
-          .collect() }
+        val probe = phase("probe") {
+          val q = batchObserved
+            .select(col("_src_part"), col("_src_off"))
+            .groupBy("_src_part")
+            .agg(min("_src_off").as("lo"), max("_src_off").as("hi"),
+              count(lit(1)).as("n"))
+          val rows = q.collect()
+          probeObserved = q.queryExecution.observedMetrics
+          rows
+        }
         (probe.map(_.getAs[Long]("n")).sum,
           probe.toSeq.map(r => PartitionLineage(
             r.getAs[Int]("_src_part"), r.getAs[Long]("lo"), r.getAs[Long]("hi"))))
@@ -449,7 +462,6 @@ object CdcApply {
     // synthesize the batch FROM those buckets). The hint is bucket-space
     // relative: trust it only if the table still has the bucket count the
     // caller computed it under (a concurrent rebucket invalidates it).
-    var batchScanned = probeInfo.isEmpty // the lineage probe above ran
     // The dense all-buckets shortcut counts on rowsIn ~= valid rows: with
     // validation on but unproven (no footer null-proof), a mostly-invalid
     // dense batch would trigger an O(table) rewrite for a handful of
@@ -464,10 +476,12 @@ object CdcApply {
         phase("probe-buckets") {
           if (denseTrusted && rowsIn >= nB.toLong * 64) (0 until nB).toSet
           else {
-            batchScanned = true
-            cleanBatch
+            val q = cleanBatch
               .select(bucketOfCols(ks.bucketCols.map(col), nB).as("b"))
-              .distinct().collect().map(_.getInt(0)).toSet
+              .distinct()
+            val bs = q.collect().map(_.getInt(0)).toSet
+            probeObserved = q.queryExecution.observedMetrics ++ probeObserved
+            bs
           }
         }
       }
@@ -495,11 +509,7 @@ object CdcApply {
       // files forward. Same maintenance mode + conflict-retry discipline as
       // the main commit path (a maintenance apply landing here must not be
       // silently fenced, and a lost commit race must retry, not crash).
-      val nInvalid =
-        if (batchScanned) observedInvalid()
-        else if (validate)
-          phase("validate") { batchObserved.filter(checkPred).count() }
-        else 0L
+      val nInvalid = invalidCount(Map.empty)
       quarantine(nInvalid)
       val snap = Snapshot(snapshotId, parentId, commitEpoch, targetSchema.json,
         schemaVersion, nB, cur.map(_.manifests).getOrElse(Seq.empty),
@@ -567,8 +577,8 @@ object CdcApply {
     // partition-local), the merge sorts within partitions by (bucket,
     // keyhash, key, lsn desc), then elects the first row of each key with
     // the STREAMING SortedLwwDedup operator — plan: Exchange -> Sort ->
-    // SortedLwwDedup -> Write with the write's dynamic-partition ordering
-    // already satisfied. The custom operator replaces the earlier
+    // SortedLwwDedup, whose output the bucket writer streams one bucket at
+    // a time. The custom operator replaces the earlier
     // Window(lag)+Filter formulation: WindowExec buffers every partition
     // group in full (an extra pass of all row bytes through memory, twice
     // with the `_hl` rollup window), which made the reduce stage
@@ -588,9 +598,8 @@ object CdcApply {
       // and leads the sort: the external sorter computes its 8-byte radix
       // prefix from the FIRST sort column only, and a per-task-near-constant
       // `b` there would force virtually every comparison through the full
-      // row comparator (string keys). `_bk` order implies `b` order, which
-      // the dedup operator re-advertises to the dynamic-partition writer
-      // (declareOrderedBy) so no extra sort is inserted.
+      // row comparator (string keys). `_bk` order implies `b` order, so the
+      // bucket writer sees each bucket's rows contiguously.
       require(nB <= (1 << 17), s"bucket count $nB exceeds the 17-bit _bk field")
       val orderSpec: Seq[(String, Boolean)] =
         (("_bk" -> false) +: ("_kh" -> false) +: ks.keyCols.map(_ -> false)) ++
@@ -612,8 +621,7 @@ object CdcApply {
         "_kh" +: ks.keyCols, orderSpec,
         // the `_hl` rollup is only meaningful when stored rows exist: on an
         // initial/bulk-load batch every key's `_hl` is the literal 0
-        rollupCol = if (cfOn && !stateEmpty) Some("_hl") else None,
-        declareOrderedBy = Seq("b"))
+        rollupCol = if (cfOn && !stateEmpty) Some("_hl") else None)
         .drop("_kh", "_bk")
     }
 
@@ -646,7 +654,10 @@ object CdcApply {
     // share an lsn and therefore a salt, so phase 1 already collapses them.
     val merged =
       if (patchEnabled)
+        // the aggregate's output is not `b`-ordered: group each task's rows
+        // by bucket so the writer opens one file per bucket per task
         patchMerge(unioned, targetSchema, ks, lake.mapPutAllCols)
+          .sortWithinPartitions("b")
       else if (saltBuckets > 0) {
         val salted = hashDedup(
           unioned.withColumn("_salt",
@@ -663,7 +674,7 @@ object CdcApply {
           .drop("_p")
       }
 
-    // Change-feed classification of each surviving row, counted via
+    // Change-feed classification of each surviving row, counted via a named
     // `observe` DURING the write job (zero extra pass, no per-row action
     // string — the counts are sums of boolean conditions over the merge's
     // existing `_st`/`_tombstone`/`_hl` columns, which constant-fold on
@@ -674,9 +685,8 @@ object CdcApply {
       sum(when(pred, 1L).otherwise(0L)).as(name)
     val isCarried = col("_st")
     val hadLive = col("_hl") === 1
-    val obs = org.apache.spark.sql.Observation()
     val observed = if (!cfOn) merged.drop("_st", "_hl") else merged
-      .observe(obs,
+      .observe(ChangeFeedMetric,
         cnt(!isCarried && !col("_tombstone") && !hadLive, "inserted"),
         cnt(!isCarried && !col("_tombstone") && hadLive, "updated"),
         cnt(!isCarried && col("_tombstone") && hadLive, "deleted"),
@@ -696,26 +706,25 @@ object CdcApply {
     val writeOpts =
       if (tableMor) graft.lake.LakeIO.bloomWriteOptions(ks.bucketCols.head)
       else Map.empty[String, String]
-    phase("merge+write") {
-      graft.model.Schemas.stampFieldIds(observed, targetSchema).write
-        .options(writeOpts)
-        .partitionBy("b").parquet(dataDir)
+    // Each file's manifest entry (row count + bucket-key min/max +
+    // INT32/INT64 zone maps) comes back from the write task that closed it,
+    // read from the footer it just wrote. Zone maps feed LakeTable.scanRange
+    // (ts/_lsn/turn_idx file skipping).
+    val written = phase("merge+write") {
+      org.apache.spark.sql.graft.BucketWriter.write(
+        graft.model.Schemas.stampFieldIds(observed, targetSchema), dataDir,
+        ks.bucketCols.head, writeOpts)
     }
     val actionCounts: Map[String, Long] =
-      if (!cfOn) Map.empty
-      else obs.get.map { case (k, v) =>
-        k -> (v match { case n: Number => n.longValue(); case _ => 0L })
-      }
-    // the write scanned the batch, so the folded validation count is ready
-    val nInvalid = observedInvalid()
+      written.observed.get(ChangeFeedMetric)
+        .map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+        .getOrElse(Map.empty).map { case (k, v) =>
+          k -> (v match { case n: Number => n.longValue(); case _ => 0L })
+        }
+    // the write scanned the batch, so its plan carries the validation count
+    val nInvalid = invalidCount(written.observed)
     quarantine(nInvalid)
-
-    // Per-file stats (row count + bucket-key min/max + INT32/INT64 zone
-    // maps) straight from the parquet footers on the driver — no extra
-    // Spark job. Zone maps feed LakeTable.scanRange (ts/_lsn/turn_idx file
-    // skipping).
-    val newFiles = phase("stats") {
-      lake.writtenFiles(dataDir, ks.bucketCols.head, targetSchema) }
+    val newFiles = written.files
     val rowsOut = newFiles.map(_.rows).sum
     // The batch's real touched set: pre-computed for copy-on-write (it
     // drives the state read), derived from the written delta files for MoR

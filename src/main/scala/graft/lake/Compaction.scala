@@ -207,21 +207,20 @@ object Compaction {
     // Aligned rebucket (one count divides the other) never moves a row
     // across old-bucket boundaries (see rebucket doc), so the exchange is
     // pure waste: keep the scan's partitioning (old bucket dirs) and let
-    // partitionBy route each task's rows to its few new dirs locally.
+    // the writer route each task's rows to its few new dirs locally.
     // MoR tables excluded: the LWW resolve above already re-partitioned.
     val alignedRebucket = newBuckets.isDefined && nB != cur.nBuckets &&
       !cur.mor && (nB % cur.nBuckets == 0 || cur.nBuckets % nB == 0)
     val stamped = graft.model.Schemas.stampFieldIds(withB, cur.schema)
-    val writer = (if (alignedRebucket) stamped
-                  else stamped.repartitionById(nB, col("b")))
-      .sortWithinPartitions(sortCols: _*)
-      .write.options(LakeIO.bloomWriteOptions(ks.bucketCols.head))
-      .partitionBy("b")
-    (if (targetFileRows > 0)
-       writer.option("maxRecordsPerFile", targetFileRows)
-     else writer).parquet(dataDir)
-
-    val newFiles = lake.writtenFiles(dataDir, ks.bucketCols.head, cur.schema)
+    val newFiles = org.apache.spark.sql.graft.BucketWriter.write(
+      (if (alignedRebucket) stamped
+       else stamped.repartitionById(nB, col("b")))
+        .sortWithinPartitions(sortCols: _*),
+      dataDir, ks.bucketCols.head,
+      LakeIO.bloomWriteOptions(ks.bucketCols.head) ++
+        (if (targetFileRows > 0)
+           Map("maxRecordsPerFile" -> targetFileRows.toString)
+         else Map.empty)).files
 
     // rowsBefore counts only what this rewrite READ (the subset's rows on
     // an incremental run) so tombstonesDropped stays meaningful

@@ -95,7 +95,16 @@ object LakeIO {
 
   def exists(p: String): Boolean = fs(p).exists(new Path(p))
 
-  def mkdirs(p: String): Unit = { fs(p).mkdirs(new Path(p)); () }
+  // On file:// the metadata primitives go through java.nio, as
+  // publishExclusive does: Hadoop's local FileSystem sets permissions on
+  // every create and mkdirs by spawning a `chmod` process when it runs
+  // without its native library.
+  private def localPath(p: String): java.nio.file.Path =
+    Paths.get(new Path(p).toUri.getPath)
+
+  def mkdirs(p: String): Unit =
+    if (isLocal(p)) { Files.createDirectories(localPath(p)); () }
+    else { fs(p).mkdirs(new Path(p)); () }
 
   /** (name, fullPath, isDirectory) of the direct children of `dir`;
     * empty if the dir does not exist. */
@@ -104,18 +113,21 @@ object LakeIO {
     val p = new Path(dir)
     if (!f.exists(p)) return Seq.empty
     f.listStatus(p).toSeq.map(st =>
-      (st.getPath.getName, st.getPath.toUri.getPath match {
-        // keep scheme-qualified paths for non-local FS
-        case local if st.getPath.toUri.getScheme == null ||
-          st.getPath.toUri.getScheme == "file" => local
-        case _ => st.getPath.toString
-      }, st.isDirectory))
+      (st.getPath.getName, pathString(st.getPath), st.isDirectory))
   }
 
+  /** The stored form of a qualified path: the bare path on the local FS,
+    * the scheme-qualified one elsewhere. Manifests record data files in
+    * this form, which is the form [[list]] returns. */
+  def pathString(p: Path): String =
+    if (p.toUri.getScheme == null || p.toUri.getScheme == "file")
+      p.toUri.getPath
+    else p.toString
+
   /** (n, path) of every `.parquet` file in a `<key>=<n>` subdir of a
-    * partitioned write dir (`b` for lake buckets, `p` for changelog source
-    * partitions), in listing order. Spark's `_SUCCESS` and `.crc` files
-    * never match. */
+    * partitioned write dir — the changelog's `p=<source partition>` dirs
+    * ([[graft.cdc.FeedStep]]), in listing order. Spark's `_SUCCESS` and
+    * `.crc` files never match. */
   def partitionFiles(dir: String, key: String): Seq[(Int, String)] =
     list(dir).collect { case (_, path, true) => path }
       .flatMap(list(_).collect {
@@ -144,11 +156,16 @@ object LakeIO {
   }
 
   /** Plain (non-exclusive) write; callers use unique names for safety. */
-  def writeBytes(p: String, bytes: Array[Byte]): Unit = {
-    val f = fs(p)
-    val out = f.create(new Path(p), true)
-    try out.write(bytes) finally out.close()
-  }
+  def writeBytes(p: String, bytes: Array[Byte]): Unit =
+    if (isLocal(p)) {
+      val lp = localPath(p)
+      Option(lp.getParent).foreach(Files.createDirectories(_))
+      Files.write(lp, bytes)
+      ()
+    } else {
+      val out = fs(p).create(new Path(p), true)
+      try out.write(bytes) finally out.close()
+    }
 
   def delete(p: String): Unit = { fs(p).delete(new Path(p), true); () }
 

@@ -5,7 +5,7 @@ import java.util.UUID
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One parquet data file owned by a snapshot, with per-file key stats used
   * for bucket/key pruning on the MERGE read path (the Spark-side analogue of
@@ -200,9 +200,13 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
  *   root/meta/v%012d.json   — snapshot metadata, highest version = current
  *   root/data/snap-<id>-<uuid>/b=<bucket>/part-*.parquet
  *
- * Crash safety: data files are written BEFORE the metadata rename; a crash
- * in between leaves orphan data directories that no snapshot references —
- * readers only ever see manifest-listed files (tested in LakeTableSpec).
+ * Crash safety: data files are written BEFORE the metadata publish, each
+ * at its final path inside a fresh `snap-` dir
+ * (`org.apache.spark.sql.graft.BucketWriter`). A failed task attempt
+ * deletes the files it wrote, and the manifests list only the files of the
+ * attempts the job accepted; a write that crashes leaves its files in a
+ * `snap-` dir no snapshot references, which readers never see and
+ * [[gcOrphans]] removes (tested in LakeTableSpec).
  */
 final class LakeTable(val spark: SparkSession, val root: String) {
   // Column identity by parquet field id (rename/drop evolution): the writer
@@ -261,26 +265,6 @@ final class LakeTable(val spark: SparkSession, val root: String) {
     * retried attempts of the same epoch from colliding. */
   def newDataDir(snapshotId: Long): String =
     s"$dataRoot/snap-$snapshotId-${UUID.randomUUID().toString.take(8)}"
-
-  /** Per-file stats of every data file just written under `dataDir` (a
-    * `b=<bucket>/` partitioned write from [[newDataDir]]), read from the
-    * parquet footers on the driver: no Spark job, O(files) metadata IO in
-    * parallel. Key min/max are recorded for `statsCol` only when `schema`
-    * types it as a string (lookup pruning compares strings); zone maps
-    * cover every INT32/INT64 column. File order within a bucket is the
-    * listing order. */
-  def writtenFiles(dataDir: String, statsCol: String,
-                   schema: StructType): Seq[DataFileMeta] = {
-    val stringCol = Some(statsCol).filter(c =>
-      schema.fields.exists(f => f.name == c && f.dataType == StringType))
-    ParquetFooters.parMap(LakeIO.partitionFiles(dataDir, "b")) {
-      case (b, p) =>
-        val st = ParquetFooters.writeStats(p, stringCol)
-        DataFileMeta(p, b, st.rows, st.minKey, st.maxKey,
-          st.zoneCols, st.zoneMins, st.zoneMaxs, st.bytes,
-          st.liveRows, st.zoneNullFree, st.zoneFieldIds)
-    }
-  }
 
   /** Write one manifest file per bucket in `byBucket`; the returned refs go
     * into the new snapshot alongside the parent's refs for untouched

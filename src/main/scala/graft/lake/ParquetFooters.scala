@@ -6,11 +6,12 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-/** Driver-side parquet footer reads, without touching data pages (O(files)
-  * small IOs; callers fan out with [[parMap]]):
-  *  - [[writeStats]]: the per-file stats a commit records in its manifests
-  *    (row and live counts, key min/max, zone maps); reached through
-  *    [[LakeTable.writtenFiles]];
+/** Parquet footer reads, without touching data pages (O(files) small IOs;
+  * driver-side callers fan out with [[parMap]]):
+  *  - [[writeStats]] / [[dataFileMeta]]: the per-file stats a commit
+  *    records in its manifests (row and live counts, key min/max, zone
+  *    maps), read by the write task that just closed the file
+  *    (`org.apache.spark.sql.graft.BucketWriter`) with that task's conf;
   *  - [[probeStats]]: the changelog probe's lineage, row count, key-null
   *    proof and embedded schema, one open per file;
   *  - [[mightContain]] / [[mightContainAny]]: bloom or dictionary
@@ -144,8 +145,9 @@ object ParquetFooters {
                                     * the read returns as NULLs, so exact
                                     * claims must match ids first */
                                   zoneFieldIds: Array[Long] = Array.empty)
-  def writeStats(path: String, stringCol: Option[String]): WriteFileStats =
-    withFooter(path) { footer =>
+  def writeStats(path: String, stringCol: Option[String],
+                 hadoopConf: Configuration = conf): WriteFileStats =
+    withFooter(path, hadoopConf) { footer =>
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
       var rows = 0L; var bytes = 0L
       var mnK: String = null; var mxK: String = null
@@ -209,7 +211,7 @@ object ParquetFooters {
       val live =
         if (!sawTomb) rows
         else if (!tombAmbiguous) rows - tombTrues
-        else countBooleanTrue(path, "_tombstone")
+        else countBooleanTrue(path, "_tombstone", hadoopConf)
           .map(rows - _).getOrElse(-1L)
       val schema = footer.getFileMetaData.getSchema
       val ids = keep.map { c =>
@@ -223,6 +225,16 @@ object ParquetFooters {
         keep.map(c => !nulled.contains(c)), ids)
     }
 
+  /** The manifest entry of the data file at `path` in bucket `bucket`:
+    * [[writeStats]] of its footer. */
+  def dataFileMeta(path: String, bucket: Int, stringCol: Option[String],
+                   hadoopConf: Configuration): DataFileMeta = {
+    val st = writeStats(path, stringCol, hadoopConf)
+    DataFileMeta(path, bucket, st.rows, st.minKey, st.maxKey,
+      st.zoneCols, st.zoneMins, st.zoneMaxs, st.bytes,
+      st.liveRows, st.zoneNullFree, st.zoneFieldIds)
+  }
+
   /** EXACT count of `true` values in a top-level boolean column, decoding
     * ONLY that column's pages (a projected row-group read — the boolean
     * chunk is bit-packed, ~rows/8 bytes of IO). Used when footer boolean
@@ -230,10 +242,11 @@ object ParquetFooters {
     * blocks). None on any decode failure — the caller records the live
     * count as UNKNOWN rather than guessing (exactness is the whole point
     * of the stat). */
-  private def countBooleanTrue(path: String, column: String): Option[Long] = {
+  private def countBooleanTrue(path: String, column: String,
+                               hadoopConf: Configuration): Option[Long] = {
     import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
     try {
-      val reader = open(path)
+      val reader = open(path, hadoopConf)
       try {
         val fileSchema = reader.getFooter.getFileMetaData.getSchema
         if (!fileSchema.containsField(column)) return Some(0L)
@@ -378,9 +391,9 @@ object ParquetFooters {
     es != null && es.hasDictionaryPages && !es.hasNonDictionaryEncodedPages
   }
 
-  private def withFooter[A](path: String)(
+  private def withFooter[A](path: String, hadoopConf: Configuration = conf)(
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
-    val reader = open(path)
+    val reader = open(path, hadoopConf)
     try f(reader.getFooter) finally reader.close()
   }
 
@@ -389,9 +402,10 @@ object ParquetFooters {
   // Configuration on every open, which costs more than the footer read
   // itself. They are built per open: a reader's codec factory is not
   // thread-safe, and parMap decodes files in parallel.
-  private def open(path: String): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf),
-      HadoopReadOptions.builder(conf).build())
+  private def open(path: String,
+                   hadoopConf: Configuration = conf): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), hadoopConf),
+      HadoopReadOptions.builder(hadoopConf).build())
 
   // One pool for every footer fan-out (its workers are daemon threads that
   // idle out), instead of a new pool — and new threads — per call.

@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
  * the winner first. The operator declares those as required distribution /
  * ordering, so Catalyst INSERTS a shuffle+sort if a caller ever violates
  * them (and reuses the merge's explicit one-exchange repartition+sort
- * otherwise — plan shape: Exchange -> Sort -> SortedLwwDedup -> Write).
+ * otherwise — plan shape: Exchange -> Sort -> SortedLwwDedup).
  *
  * Reference analogue: per-key in-memory merge before CQL write
  * (ActivityAggregatesFunction.scala:218-289) — restated as a streaming
@@ -42,29 +42,19 @@ final case class SortedLwwDedup(
     /** int column whose per-key MAX is folded onto the emitted winner
       * (the change feed's "key had a live stored row" rollup) */
     rollup: Option[Attribute],
-    /** orderings that provably hold on the output and that the caller wants
-      * ADVERTISED to downstream operators. Use case: the merge sorts by a
-      * fused `(bucket << 46 | keyhash >> 18)` long so the sorter's 8-byte
-      * prefix comparisons resolve nearly all row pairs (a leading
-      * near-constant `bucket` column would push every comparison into the
-      * row comparator) — the fused order implies bucket order, which is
-      * exactly what the dynamic-partition writer requires, but Catalyst
-      * cannot derive that implication itself. MUST be truthful claims. */
-    declaredOrder: Seq[SortOrder],
     child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   // accurate references keep column pruning from dropping sort/key columns
   override def references: AttributeSet =
-    AttributeSet(partExprs ++ keyExprs ++ sortOrder ++ declaredOrder ++ rollup)
+    AttributeSet(partExprs ++ keyExprs ++ sortOrder ++ rollup)
   override protected def withNewChildInternal(newChild: LogicalPlan): SortedLwwDedup =
     copy(child = newChild)
 }
 
 object SortedLwwDedupStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case SortedLwwDedup(part, key, order, rollup, declared, child) =>
-      SortedLwwDedupExec(part, key, order, rollup, declared,
-        planLater(child)) :: Nil
+    case SortedLwwDedup(part, key, order, rollup, child) =>
+      SortedLwwDedupExec(part, key, order, rollup, planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -74,14 +64,11 @@ final case class SortedLwwDedupExec(
     keyExprs: Seq[Expression],
     sortOrder: Seq[SortOrder],
     rollup: Option[Attribute],
-    declaredOrder: Seq[SortOrder],
     child: SparkPlan) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] =
-    if (declaredOrder.nonEmpty) declaredOrder ++ child.outputOrdering
-    else child.outputOrdering
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
 
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(partExprs) :: Nil
@@ -161,10 +148,7 @@ object SortedLwwDedup {
       partCols: Seq[String],
       keyCols: Seq[String],
       orderSpec: Seq[(String, Boolean)],
-      rollupCol: Option[String],
-      /** columns the output is PROVABLY ordered by (see
-        * [[SortedLwwDedup.declaredOrder]]); advertised ascending */
-      declareOrderedBy: Seq[String] = Nil): DataFrame = {
+      rollupCol: Option[String]): DataFrame = {
     val spark = df.sparkSession
     ensureRegistered(spark)
     val lp = df.queryExecution.analyzed
@@ -178,7 +162,6 @@ object SortedLwwDedup {
         SortOrder(attr(n), if (desc) Descending else Ascending)
       },
       rollupCol.map(attr),
-      declareOrderedBy.map(n => SortOrder(attr(n), Ascending)),
       lp)
     org.apache.spark.sql.graft.GraftBridge.ofRows(spark, node)
   }

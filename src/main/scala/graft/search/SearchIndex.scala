@@ -138,16 +138,15 @@ object SearchIndex {
     val snapshotId = cur.map(_.snapshotId + 1).getOrElse(0L)
     val withB = deltas
       .withColumn("b", CdcApply.bucketOfCols(Seq(col("term")), nB))
-    val dataDir = index.newDataDir(snapshotId)
-    withB
-      .repartitionById(math.max(nB, 1), col("b"))
-      .sortWithinPartitions("b", "term", "conv_id", "turn_idx")
+    val metas = org.apache.spark.sql.graft.BucketWriter.write(
+      withB
+        .repartitionById(math.max(nB, 1), col("b"))
+        .sortWithinPartitions("b", "term", "conv_id", "turn_idx"),
+      index.newDataDir(snapshotId), "term",
       // term blooms: `search` point-looks-up each query term over the
       // bucket's delta chain — same membership pruning as the main lake's
       // MoR chains (LakeTable.lookupFilesKeyed probes them)
-      .write.options(graft.lake.LakeIO.bloomWriteOptions("term"))
-      .partitionBy("b").parquet(dataDir)
-    val metas = index.writtenFiles(dataDir, "term", deltas.schema)
+      graft.lake.LakeIO.bloomWriteOptions("term")).files
     val newRefs = index.writeManifests(snapshotId, metas.groupBy(_.bucket))
     val carried = replaceBuckets match {
       case None => cur.map(_.manifests).getOrElse(Seq.empty)

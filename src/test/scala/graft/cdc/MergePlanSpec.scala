@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.graft.BucketWriter
+
 import graft.TestSpark
 import graft.changelog.ChangelogGen
 import graft.lake.LakeTable
@@ -29,15 +31,22 @@ class MergePlanSpec extends AnyFunSuite {
     raw"\bExchange (\w+)(?:\((.*), (\d+)\))?,".r.findAllMatchIn(p).map { m =>
       if (m.group(1) == "SinglePartition") 1 else m.group(3).toInt
     }.toSeq
+  // the merge's write plans: bucket writes (by the writer's execution name)
+  // running the dedup operator
+  private def mergeWrites(plans: mutable.ArrayBuffer[(String, String)])
+      : Seq[String] = plans.synchronized(plans.toSeq.collect {
+    case (BucketWriter.ExecutionName, p) if p.contains("SortedLwwDedup") => p
+  })
   private def finalPlan(p0: String): String = p0.split("== Initial Plan ==")(0)
   private def shape(p: String): (Int, Int) = (
     exchangeRe.findAllIn(p).size, raw"\bSort \[".r.findAllIn(p).size)
-  // records every executed plan; delivery is asynchronous
-  private def recorder(plans: mutable.ArrayBuffer[String]) =
+  // records every executed plan with its execution name; delivery is
+  // asynchronous
+  private def recorder(plans: mutable.ArrayBuffer[(String, String)]) =
     new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString; () }
+        plans.synchronized { plans += funcName -> qe.executedPlan.toString; () }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
@@ -49,7 +58,7 @@ class MergePlanSpec extends AnyFunSuite {
       pUpdate = 0.3, pDelete = 0.05, pDup = 0.05, segSize = 1000))
     val lake = new LakeTable(spark, TestSpark.tmpDir("plan-lake"))
 
-    val plans = mutable.ArrayBuffer[String]()
+    val plans = mutable.ArrayBuffer[(String, String)]()
     val listener = recorder(plans)
     spark.listenerManager.register(listener)
     try {
@@ -57,14 +66,11 @@ class MergePlanSpec extends AnyFunSuite {
         quiet = true).run()
       // listener delivery is async; wait for the plans to arrive
       val deadline = System.nanoTime() + 10e9.toLong
-      while (System.nanoTime() < deadline &&
-        plans.synchronized(!plans.exists(p =>
-          p.contains("WriteFiles") && p.contains("SortedLwwDedup")))) Thread.sleep(50)
-      // the merge write job: the one whose plan carries the lake write +
-      // the dedup operator
-      val writePlans = plans.synchronized {
-        plans.filter(p => p.contains("WriteFiles") && p.contains("SortedLwwDedup"))
-      }
+      while (System.nanoTime() < deadline && mergeWrites(plans).isEmpty)
+        Thread.sleep(50)
+      // the merge write job: the bucket write whose plan carries the dedup
+      // operator
+      val writePlans = mergeWrites(plans)
       assert(writePlans.nonEmpty, "no merge write plan captured")
       writePlans.foreach { p0 =>
         // adaptive plans print "Final Plan" and "Initial Plan" sections —
@@ -95,20 +101,16 @@ class MergePlanSpec extends AnyFunSuite {
       pUpdate = 0.4, pDelete = 0.05, pDup = 0.05, segSize = 500))
     val lake = new LakeTable(spark, TestSpark.tmpDir("plan-mor-lake"))
 
-    val plans = mutable.ArrayBuffer[String]()
+    val plans = mutable.ArrayBuffer[(String, String)]()
     val listener = recorder(plans)
     spark.listenerManager.register(listener)
     try {
       new CdcDriver(spark, dir, lake, segmentsPerBatch = 1, nBuckets = 8,
         quiet = true, mor = true, morCompactChain = 0).run()
       val deadline = System.nanoTime() + 10e9.toLong
-      while (System.nanoTime() < deadline &&
-        plans.synchronized(plans.count(p =>
-          p.contains("WriteFiles") && p.contains("SortedLwwDedup")) < 4))
+      while (System.nanoTime() < deadline && mergeWrites(plans).size < 4)
         Thread.sleep(50)
-      val appendPlans = plans.synchronized {
-        plans.filter(p => p.contains("WriteFiles") && p.contains("SortedLwwDedup"))
-      }
+      val appendPlans = mergeWrites(plans)
       assert(appendPlans.size >= 4, "append write plans not captured")
       appendPlans.map(finalPlan).foreach { p =>
         assert(shape(p) == ((1, 1)),
@@ -133,10 +135,10 @@ class MergePlanSpec extends AnyFunSuite {
       lake.read().write.format("noop").mode("overwrite").save()
       val deadline2 = System.nanoTime() + 10e9.toLong
       while (System.nanoTime() < deadline2 &&
-        plans.synchronized(!plans.exists(_.contains("SortedLwwDedup"))))
+        plans.synchronized(!plans.exists(_._2.contains("SortedLwwDedup"))))
         Thread.sleep(50)
       val readPlan = plans.synchronized {
-        plans.find(_.contains("SortedLwwDedup")).map(finalPlan)
+        plans.map(_._2).find(_.contains("SortedLwwDedup")).map(finalPlan)
       }
       assert(readPlan.isDefined, "resolved read plan not captured")
       readPlan.foreach { p =>
@@ -157,7 +159,7 @@ class MergePlanSpec extends AnyFunSuite {
         .withColumn("_src_part", lit(0))
         .withColumn("_src_off", col("_lsn"))
 
-    val plans = mutable.ArrayBuffer[String]()
+    val plans = mutable.ArrayBuffer[(String, String)]()
     val listener = recorder(plans)
     // apply a batch and return the merge write plan it ran
     def applied(lake: LakeTable, keys: Seq[String], epoch: Long,
@@ -166,8 +168,7 @@ class MergePlanSpec extends AnyFunSuite {
       val st = CdcApply.apply(lake, batch(keys, epoch * 100000L), epoch,
         nBuckets)
       val deadline = System.nanoTime() + 10e9.toLong
-      def mergePlan = plans.synchronized(plans.find(p =>
-        p.contains("WriteFiles") && p.contains("SortedLwwDedup")))
+      def mergePlan = mergeWrites(plans).headOption
       while (System.nanoTime() < deadline && mergePlan.isEmpty)
         Thread.sleep(50)
       val plan = mergePlan

@@ -1,11 +1,15 @@
 package graft.cdc
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.changelog.ChangelogGen
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, PartitionLineage}
 
 /** Dead-letter path: malformed change events (null key, null turn index,
   * unknown op) are quarantined with a reason, never merged, counted in
@@ -80,5 +84,40 @@ class QuarantineSpec extends AnyFunSuite {
     assert(!s.skipped && s.failedEvents == 3 && s.rowsOut == 0)
     assert(lake.currentSnapshot.get.epoch == 2)
     assert(CdcOracle.tableState(lake.read()) == before)
+  }
+
+  test("a batch built on another session counts its invalid events") {
+    // rows lsn0 until lsn0 + n over 40 conversations; `badAt` gets op 'X'
+    def events(s: SparkSession, lsn0: Long, n: Long,
+               badAt: Long = -1L): DataFrame =
+      s.range(lsn0, lsn0 + n).select(
+        when(col("id") === badAt, "X").otherwise("U").as("op"),
+        format_string("c%02d", col("id") % 40).as("conv_id"),
+        (col("id") % 7).cast("int").as("turn_idx"), lit("user").as("role"),
+        col("id").cast("string").as("text"),
+        lit(null).cast("string").as("tool"),
+        lit("2024-01-01").cast("timestamp").as("ts"),
+        col("id").as("_lsn"), lit(0).as("_src_part"), col("id").as("_src_off"))
+    val lake = new LakeTable(spark, TestSpark.tmpDir("quar-session-lake"))
+    CdcApply.apply(lake, events(spark, 0, 400), epoch = 1, nBuckets = 4)
+    assert(lake.currentSnapshot.get.manifests.size == 4)
+
+    // dense (>= 64 rows per bucket) and footer-proven key-clean, so no probe
+    // scans the batch first: only the merge write, rooted in the lake's
+    // session through its state read, observes it
+    val other = spark.newSession()
+    val bad = 1234L
+    val batch = events(other, 1000, 300, badAt = bad)
+    val st = Await.result(Future(CdcApply.apply(lake, batch, epoch = 2,
+      probeInfo = Some(CdcApply.ProbeInfo(300L,
+        Seq(PartitionLineage(0, 1000L, 1299L)), keysNullFree = true))))(
+      ExecutionContext.global), 120.seconds)
+    assert(!st.skipped && st.failedEvents == 1)
+    val quar = spark.read.parquet(s"${lake.root}/quarantine/epoch=2")
+    assert(quar.select("_lsn", "_reason").collect().map(r =>
+      (r.getLong(0), r.getString(1))).toSeq == Seq(bad -> "bad_op"))
+    assert(CdcOracle.tableState(lake.read()) ==
+      CdcOracle.fold(events(spark, 0, 400)
+        .unionByName(events(spark, 1000, 300, badAt = bad))))
   }
 }

@@ -172,9 +172,10 @@ class ManifestSpec extends AnyFunSuite {
         assert(metas.map(m => canon(m.path)).sorted ==
           parquet.map(_.getCanonicalPath).sorted,
           s"snapshot ${s.snapshotId}: registered != written")
-        assert(other.nonEmpty && other.forall(f =>
-          f.getName == "_SUCCESS" || f.getName.endsWith(".crc")),
+        // no output-commit leftovers: only the local FS's .crc side files
+        assert(other.nonEmpty && other.forall(_.getName.endsWith(".crc")),
           other.map(_.getName))
+        assert(!new java.io.File(dirs.head, "_temporary").exists)
         metas.foreach { m =>
           assert(new java.io.File(m.path).getParentFile.getName ==
             s"b=${m.bucket}")
